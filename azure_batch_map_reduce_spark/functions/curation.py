@@ -8224,12 +8224,9 @@ def _qc_train(
 #    a round's evaluation fuses into the NEXT round's step scan (the
 #    step aggregate's counts at weights w ARE the evaluation of w).
 
-_QC_PATH_SHARED: dict[tuple, tuple[list, list, int]] = {}
-
-
-def _qc_clear_shared_path() -> None:
-    """Drop all memoized weight paths (test/drill hook)."""
-    _QC_PATH_SHARED.clear()
+# Weight vectors are stored as tuples and handed out as fresh lists, so
+# a caller's in-place edit cannot reach the path other queries read.
+_QC_PATH_SHARED: dict[tuple, tuple[tuple, tuple, int]] = {}
 
 
 def _qc_train_shared_path(
@@ -8245,17 +8242,17 @@ def _qc_train_shared_path(
     for k in [k for k in _QC_PATH_SHARED if k[0] != app]:
         del _QC_PATH_SHARED[k]
     key = (app, os.path.realpath(sf_dir))
-    path, accs, n = _QC_PATH_SHARED.get(key, ([], [], 0))
+    path, accs, n = _QC_PATH_SHARED.get(key, ((), (), 0))
     if len(path) < n_steps:
         more_path, more_accs, n = _qc_train(
             _qc_obs_shared(spark, sf_dir),
             n_steps=n_steps - len(path),
             w0=path[-1] if path else None,
         )
-        path = path + more_path
-        accs = accs + more_accs
+        path = path + tuple(map(tuple, more_path))
+        accs = accs + tuple(more_accs)
         _QC_PATH_SHARED[key] = (path, accs, n)
-    return path[:n_steps], accs[:n_steps], n
+    return [list(w) for w in path[:n_steps]], list(accs[:n_steps]), n
 
 
 def _qc_dlit(v: float) -> str:

@@ -57,10 +57,6 @@ MINHASH_PERMS: list[tuple[int, int]] = [
 N_BANDS, ROWS_PER_BAND = 4, 4  # 16 = 4 × 4; tuned for jaccard ≈ 0.9
 
 
-def _word_set(col: Column) -> Column:
-    return F.array_distinct(F.split(col, " "))
-
-
 def _spread(df: DataFrame, *keys: str) -> DataFrame:
     """Repartition a small single-split scan across the cores so CPU-heavy
     per-row work (md5, shingling) parallelizes. At 100 TB the source

@@ -3,12 +3,13 @@
 Reproduces the reference's computation contract (``Readme.md:7``): for a
 directory of input files, run a pluggable transformation once per file
 (map, ``Program.cs:332-349``), then one consolidation over all map
-outputs (reduce, ``Program.cs:351-384``), with the barrier enforced by
-the DAG (``Program.cs:306,355``). Differences by design:
+outputs (reduce, ``Program.cs:351-384``); the reference's dependency
+barrier (``Program.cs:306,355``) becomes one reducer task that consumes
+every map partition before it reduces. Differences by design:
 
 - Staging (upload/SAS/rename — ``Program.cs:248-290,339-345``) is gone:
-  Spark reads files in place and the shuffle service materializes the
-  map→reduce edge.
+  Spark reads files in place and the map→reduce edge is a narrow
+  ``coalesce(1)``, with no shuffle files (see :func:`gather_reduce`).
 - Failure semantics are *stronger*: the reference only detects failures
   after completion (``Program.cs:435-456``, no retry — the reducer can
   silently consume partial inputs); here a failed task is retried
@@ -160,10 +161,18 @@ def gather_reduce(
     reduce_fn: Callable[[list[tuple[str, bytes]]], bytes] | None = None,
     output_pattern: str | None = None,
 ) -> DataFrame:
-    """L7+L8+L9: barrier on all map tasks, gather every map output, run
-    ONE consolidation (``Program.cs:351-384``). ``coalesce(1)`` after the
-    map stage gives the all-upstream barrier + single-consumer layout the
-    reference builds with DependsOn + SAS-spliced ResourceFiles.
+    """L7+L8+L9: gather every map output and run ONE consolidation over
+    them (``Program.cs:351-384``).
+
+    ``coalesce(1)`` is a narrow dependency: there is no exchange, no
+    stage barrier and no partial reduce. The single reducer task runs
+    the upstream map partitions one after another, one Python map
+    evaluation each, and ``run`` drains all of them before it reduces.
+    That gives the reducer every map output, which the reference gets
+    from DependsOn + SAS-spliced ResourceFiles, but it also serializes
+    the map work inside that one task. An exchange (``repartition(1)``)
+    would run the map partitions as parallel tasks at the cost of a
+    shuffle write and read.
 
     At 100 TB a single reducer is the bottleneck by definition — prefer
     an aggregation (partial+final) when the consolidation is associative;

@@ -14,8 +14,12 @@ from __future__ import annotations
 
 import contextlib
 import os
+import re
+import sysconfig
 
 from pyspark.sql import SparkSession
+
+WORKER_DAEMON_MODULE = "azure_batch_map_reduce_spark.worker_daemon"
 
 
 @contextlib.contextmanager
@@ -87,6 +91,27 @@ def autoscale_conf(
     }
 
 
+def worker_daemon_conf(master: str) -> dict[str, str]:
+    """``spark.python.daemon.module`` for :mod:`.worker_daemon`, which
+    cuts the per-task ``pyspark.zip`` re-read out of every Python worker.
+
+    Empty unless ``master`` is ``local`` or ``local[...]``: there the
+    workers run this interpreter on this host. It is also empty when the
+    workers could not import this package (the daemon starts from the
+    driver's working directory, ``PYTHONPATH`` and site-packages), since
+    a daemon that fails to import fails every Python task.
+    """
+    if not re.fullmatch(r"local(\[.+\])?", master):
+        return {}
+    root = os.path.realpath(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    site = sysconfig.get_paths()
+    search = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    search += [site["purelib"], site["platlib"]]
+    if not any(p and os.path.realpath(p) == root for p in search):
+        return {}
+    return {"spark.python.daemon.module": WORKER_DAEMON_MODULE}
+
+
 def get_spark(
     app_name: str = "azure-batch-map-reduce-spark",
     master: str | None = None,
@@ -106,6 +131,9 @@ def get_spark(
     executable form of the reference's pool-autoscale formula (L17).
     Local masters have no executor-backend to scale, so the flag is
     meaningful on cluster masters; the conf set itself is unit-tested.
+
+    Local masters also get :func:`worker_daemon_conf`; cluster masters
+    keep Spark's default Python daemon.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if master is None:
@@ -155,6 +183,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.pyspark.udf.simplifiedTraceback", "true")
     )
+    for k, v in worker_daemon_conf(master).items():
+        builder = builder.config(k, v)
     if dynamic_allocation:
         for k, v in autoscale_conf(max_executors=max_executors).items():
             builder = builder.config(k, v)

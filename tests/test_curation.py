@@ -857,6 +857,11 @@ def test_qc_shared_path_and_multi_step_equivalence(spark, sf_dir):
     assert p2 == f4[:2] and a2 == fa4[:2]
     p3, a3, _ = _qc_train_shared_path(spark, sf_dir)  # slice, no scan
     assert p3 == f4[:3] and a3 == fa4[:3]
+    # A caller's in-place edit must not reach the memo.
+    p3[0][0] += 1.0
+    p3.append([0.0])
+    a3.clear()
+    assert _qc_train_shared_path(spark, sf_dir)[:2] == (f4[:3], fa4[:3])
 
     # (b) fused scan vs the per-slice originals it replaced.
     w = f4[1]
