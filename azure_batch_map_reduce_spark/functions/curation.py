@@ -43,6 +43,7 @@ from azure_batch_map_reduce_spark.operators.ranks import (
     round_nz,
 )
 from azure_batch_map_reduce_spark.registry import query
+from azure_batch_map_reduce_spark.session import session_store
 
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 IPV4_RE = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
@@ -8029,62 +8030,30 @@ def _qc_obs(
     )
 
 
-# --- session-shared feature frame (r14 optimization round) ---------------
+# --- session-shared feature frame ----------------------------------------
 #
 # Eighteen trainer-family queries (q433/q437/q439/q441/q442/q448/q449/
 # q450/q451/q459/q462/q463/q473/q474/q475/q476/q477/q478) consume the
-# SAME deterministic feature frame — and each rebuilt it from the
-# documents parquet per invocation: two text splits, a stopword filter
-# and a regexp per row (guide §2.3 "project before the exchange" /
+# SAME deterministic feature frame: two text splits, a stopword filter
+# and a regexp per document (guide §2.3 "project before the exchange" /
 # §5 caching: the frame is reused, recomputing it is the expensive
-# part). The store below is the ULM-lattice pattern (text.py §8c6)
-# applied to the trainer family: build the SUPERSET frame (doc_id,
-# source, xa, y) once per (applicationId, sf_dir), localCheckpoint it
-# (truncating lineage; surviving the bench/differential protocol's
-# per-query `spark.catalog.clearCache()`), memoize it module-level for
-# the life of the Spark application, and slice per consumer. Sharing
-# changes no released value: every column expression is deterministic
-# per row, every downstream sum is over BIGINT-quantized cells (the
-# repo's rounding contract), and the differential re-ran green at all
-# three SFs after the switch.
+# part). `_qc_obs_shared` builds the SUPERSET frame (doc_id, source, xa,
+# y) once per Spark application and sf_dir through
+# `session.session_store`, localCheckpoints it (truncating lineage and
+# surviving the per-query `spark.catalog.clearCache()`), and slices it
+# per consumer. Sharing changes no released value: every column
+# expression is deterministic per row, and every downstream sum is over
+# BIGINT-quantized cells (the repo's rounding contract).
 #
-# Lifecycle (the q429 rule): entries live for the Spark application;
-# stale application keys are pruned on access; `_qc_clear_shared()`
-# resets for tests/drills. SIZE-AWARE (the §8c7 lesson): the frame is
-# ~60 B/doc — checkpoint only while the doc count stays a comfortable
-# fraction of the heap (≤ _QC_CACHE_MAX_DOCS ≈ 120 MB of rows);
-# beyond that, hand back the lazy frame (a map fused into the parquet
-# scan) and let each consumer's own persist() policy decide, which is
-# how a 100 TB training session should behave anyway: features are
-# the lightweight proxy (guide §8.4), rebuilt or spilled per phase,
-# never a second copy of the corpus.
-
-_QC_SHARED: dict[tuple, DataFrame] = {}
+# SIZE-AWARE (the §8c7 lesson): the frame is ~60 B/doc — checkpoint only
+# while the doc count stays a comfortable fraction of the heap
+# (≤ _QC_CACHE_MAX_DOCS ≈ 120 MB of rows); beyond that, store the lazy
+# frame (a map fused into the parquet scan) and let each consumer's own
+# persist() policy decide, which is how a 100 TB training session should
+# behave anyway: features are the lightweight proxy (guide §8.4), rebuilt
+# or spilled per phase, never a second copy of the corpus.
 
 _QC_CACHE_MAX_DOCS = 2_000_000
-
-
-def _release_checkpoint_blocks(df: DataFrame) -> None:
-    """Best-effort free of a localCheckpoint'ed frame's storage blocks
-    (r14 ADVICE item 3): the checkpointed RDD lives inside the frame's
-    LogicalRDD leaf; unpersisting it returns the MEMORY_AND_DISK blocks
-    immediately instead of waiting for the ContextCleaner to notice the
-    reference drop. Defensive by design — a non-checkpointed (lazy,
-    over-bound) entry or an internal-API change just skips the free."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
-def _qc_clear_shared() -> None:
-    """Drop all memoized feature frames (test/drill hook), releasing
-    their checkpoint blocks best-effort first; the derived default
-    weight-path memo clears with it."""
-    for df in _QC_SHARED.values():
-        _release_checkpoint_blocks(df)
-    _QC_SHARED.clear()
-    _QC_PATH_SHARED.clear()
 
 
 def _qc_obs_shared(
@@ -8093,27 +8062,20 @@ def _qc_obs_shared(
     with_source: bool = False,
     with_id: bool = False,
 ) -> DataFrame:
-    """:func:`_qc_obs` resolved through the session-shared store: one
-    superset build per (application, sf_dir), sliced to the shape the
-    caller asked for (same columns, same order as the raw builder)."""
-    import os
+    """:func:`_qc_obs` resolved through the session store: one superset
+    build per (application, sf_dir), sliced to the shape the caller
+    asked for (same columns, same order as the raw builder)."""
 
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _QC_SHARED if k[0] != app]:
-        del _QC_SHARED[k]
-    # realpath-normalized key (r14 ADVICE item 3): two spellings of the
-    # same fixture dir must not build two stores. The fixtures are
-    # immutable per process, so no mtime invalidation is needed.
-    key = (app, os.path.realpath(sf_dir))
-    df = _QC_SHARED.get(key)
-    if df is None:
+    def build() -> DataFrame:
         df = _qc_obs(spark, sf_dir, with_source=True, with_id=True)
         # count() over the parquet scan resolves from footer metadata —
         # one cheap job, paid once per session.
         n_docs = load_tables(spark, sf_dir)["documents"].count()
         if n_docs <= _QC_CACHE_MAX_DOCS:
             df = df.localCheckpoint(eager=True)
-        _QC_SHARED[key] = df
+        return df
+
+    df = session_store(spark, "qc", sf_dir, "obs", build)
     cols = ["xa", "y"]
     if with_source:
         cols = ["source", *cols]
@@ -8190,26 +8152,25 @@ def _qc_train(
     return path, accs, n_rows
 
 
-# --- r15 optimization round: shared default weight path + fused steps -----
+# --- shared default weight path + fused steps ------------------------------
 #
-# Two complementary job-count levers for the trainer family (r14
-# verdict task 2 — at fixture scale each per-step Spark job on the
-# 5000-row checkpointed feature frame is almost pure scheduling
-# overhead, so honest time ≈ job count × per-job latency; at 100 TB the
-# same changes remove genuinely redundant corpus scans):
+# Two job-count levers for the trainer family. At fixture scale each
+# per-step Spark job on the 5000-row checkpointed feature frame is
+# almost pure scheduling overhead, so wall time ≈ job count × per-job
+# latency; at 100 TB the same changes remove genuinely redundant corpus
+# scans.
 #
 # 1. `_qc_train_shared_path` — the DEFAULT full-corpus training path
 #    (lr=_QC_LR, 4 dims, no subset/schedule) is one deterministic
-#    artifact consumed verbatim by SIX queries (q433, q449, q451, q474
-#    extends it to 4 steps, q477's teacher, and q433's own releases).
-#    Before r15 each re-ran the 3 training scans per invocation; the
-#    path is now memoized per (application, realpath(sf_dir)) in the
-#    `_QC_SHARED` idiom, extend-and-slice so q474's step 4 continues
-#    from the cached step 3. Model-grain state only (lists of 4
-#    doubles + exact integer counts) — nothing persists across
-#    processes, nothing is keyed on data content, and every cached
-#    value is bit-identical to what each consumer computed before (one
-#    template, one arithmetic sequence — pinned by test).
+#    artifact consumed verbatim by six queries (q433 and its releases,
+#    q449, q451, q474 to 4 steps, q477's teacher). Each step k is one
+#    session-store entry ("step", k), built by one warm-started
+#    `_qc_train` step from step k-1, so a caller that needs more steps
+#    continues from the stored ones. Model-grain state only (tuples of
+#    4 doubles + exact integer counts): nothing persists across
+#    processes, nothing is keyed on data content, and every stored
+#    value is bit-identical to a fresh `_qc_train` run (one template,
+#    one arithmetic sequence — pinned by test).
 #
 # 2. `_qc_multi_step` — ONE fused scan computing the q433 step
 #    aggregates for MANY (weights, feature-mask, row-slice) specs at
@@ -8224,35 +8185,29 @@ def _qc_train(
 #    a round's evaluation fuses into the NEXT round's step scan (the
 #    step aggregate's counts at weights w ARE the evaluation of w).
 
-# Weight vectors are stored as tuples and handed out as fresh lists, so
-# a caller's in-place edit cannot reach the path other queries read.
-_QC_PATH_SHARED: dict[tuple, tuple[tuple, tuple, int]] = {}
-
 
 def _qc_train_shared_path(
     spark: SparkSession, sf_dir: str, n_steps: int = _QC_STEPS
 ) -> tuple[list, list, int]:
     """The default-config training path through the session store:
-    returns ``(path[:n_steps], accs[:n_steps], n)`` exactly as
-    ``_qc_train(_qc_obs_shared(...), n_steps)`` would, extending the
-    cached path with warm-started steps when a caller needs more."""
-    import os
+    returns ``(path, accs, n)`` exactly as
+    ``_qc_train(_qc_obs_shared(...), n_steps)`` would. Steps are stored
+    as tuples and handed out as fresh lists, so a caller's in-place
+    edit cannot reach the path other queries read."""
 
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _QC_PATH_SHARED if k[0] != app]:
-        del _QC_PATH_SHARED[k]
-    key = (app, os.path.realpath(sf_dir))
-    path, accs, n = _QC_PATH_SHARED.get(key, ((), (), 0))
-    if len(path) < n_steps:
-        more_path, more_accs, n = _qc_train(
-            _qc_obs_shared(spark, sf_dir),
-            n_steps=n_steps - len(path),
-            w0=path[-1] if path else None,
-        )
-        path = path + tuple(map(tuple, more_path))
-        accs = accs + tuple(more_accs)
-        _QC_PATH_SHARED[key] = (path, accs, n)
-    return [list(w) for w in path[:n_steps]], list(accs[:n_steps]), n
+    def step(k: int) -> tuple:
+        def build() -> tuple:
+            w0 = list(step(k - 1)[0]) if k > 1 else None
+            path, accs, n = _qc_train(
+                _qc_obs_shared(spark, sf_dir), n_steps=1, w0=w0
+            )
+            return tuple(path[0]), accs[0], n
+
+        return session_store(spark, "qc", sf_dir, ("step", k), build)
+
+    steps = [step(k) for k in range(1, n_steps + 1)]
+    path = [list(w) for w, _, _ in steps]
+    return path, [acc for _, acc, _ in steps], steps[-1][2]
 
 
 def _qc_dlit(v: float) -> str:
@@ -8275,7 +8230,8 @@ def _qc_multi_step(
     ``nc``/``n`` are the correct/total counts at the spec's weights
     (the pre-update accuracy of this step ≡ the post-update
     evaluation of the previous one), ``gq`` the quantized per-dim
-    gradient sums (omitted when ``with_grads=False``)."""
+    gradient sums (omitted when ``with_grads=False``). A spec that
+    selects no rows raises ``ValueError`` naming it."""
     # Project each spec's margin fold ONCE per row, then aggregate
     # simple column references — the fold would otherwise be
     # re-evaluated inside every aggregate expression (6× per spec),
@@ -8343,6 +8299,12 @@ def _qc_multi_step(
     )
     out = {}
     for i, s in enumerate(specs):
+        # An empty slice leaves the sums NULL, and every weight update
+        # and accuracy built from this result divides by n.
+        if not row[f"s{i}_n"]:
+            raise ValueError(
+                f"_qc_multi_step: spec {s['name']!r} selects no rows"
+            )
         ent = {
             "nc": int(row[f"s{i}_nc"]),
             "n": int(row[f"s{i}_n"]),

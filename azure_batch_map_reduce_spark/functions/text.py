@@ -18,6 +18,7 @@ from azure_batch_map_reduce_spark.operators.ranks import (
     round_nz,
 )
 from azure_batch_map_reduce_spark.registry import query
+from azure_batch_map_reduce_spark.session import session_store
 
 # Distinct-marker-word language scoring: deterministic, vocabulary-based.
 # (The fixture text is synthetic word soup; the point is the operator
@@ -6105,28 +6106,22 @@ def _ulm_block_arrays(pl: DataFrame, model: DataFrame) -> DataFrame:
     )
 
 
-# --- session-shared lattice build (r13 verdict task 1) --------------------
+# --- session-shared lattice build -----------------------------------------
 #
-# q443/q447/q452/q454 all derive from the SAME deterministic frames:
+# q443/q447/q452/q454/q470 all derive from the SAME deterministic frames:
 # the candidate explode (pl), the vocabulary counts (cnts), the blocked
 # cost arrays under the initial model (blk0), the Viterbi usage recount
-# (used) and the blocked arrays under the re-estimated model (blk1).
-# Before r14 each query rebuilt its slice from scratch — four identical
-# candidate explodes per bench/differential session, ~28% of the
-# headline sink (r13 verdict). The store below builds each component
-# LAZILY, localCheckpoint(eager)s it (truncating lineage and surviving
-# the per-query `spark.catalog.clearCache()` in bench.py/oracle.py,
-# which only clears the SQL CacheManager), and memoizes it keyed by
-# (applicationId, sf_dir, block size). Lifecycle (the q429 rule):
-# entries live for the Spark application — checkpointed blocks are
-# MEMORY_AND_DISK at bounded grain (positions×3 for pl, vocab for
-# cnts/used, blocks for blk0/blk1); stale keys from a previous
-# application in the same process are pruned on access, and
-# `_ulm_clear_shared` resets the store for tests. Sharing does not
-# change any released value: every component is deterministic on this
-# runtime, and the oracle side has always shared one CTE text.
-
-_ULM_SHARED: dict[tuple, dict[str, DataFrame]] = {}
+# (used) and the blocked arrays under the re-estimated model (blk1, and
+# usedK/blkK for later EM rounds). `_ulm_component` builds each one
+# LAZILY through `session.session_store` (family "ulm", one build per
+# Spark application and sf_dir) and localCheckpoint(eager)s it, which
+# truncates lineage and survives the per-query
+# `spark.catalog.clearCache()` in bench.py/oracle.py (it clears only the
+# SQL CacheManager). Checkpointed blocks are MEMORY_AND_DISK at bounded
+# grain: positions×3 for pl, vocab for cnts/used, blocks for blk0/blk1.
+# Sharing does not change any released value: every component is
+# deterministic on this runtime, and the oracle side shares one CTE
+# text.
 
 # Checkpoint the candidate explode only while its row storage
 # (~120 B/char × chars) stays a comfortable fraction of the default
@@ -6134,107 +6129,68 @@ _ULM_SHARED: dict[tuple, dict[str, DataFrame]] = {}
 _ULM_PL_CACHE_MAX_CHARS = 20_000_000
 
 
-def _ulm_clear_shared() -> None:
-    """Drop all memoized lattice components (test hook), releasing
-    their checkpoint blocks best-effort first (r14 ADVICE item 3)."""
-    from azure_batch_map_reduce_spark.functions.curation import (
-        _release_checkpoint_blocks,
-    )
-
-    for ent in _ULM_SHARED.values():
-        for df in ent.values():
-            _release_checkpoint_blocks(df)
-    _ULM_SHARED.clear()
-
-
 def _ulm_component(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazily build, checkpoint, and memoize one shared lattice
-    component: "pl", "cnts", "blk0", "used", or "blk1". The cheap
-    vocab-bounded model projections (model0/model1) are rebuilt from
-    checkpointed inputs at each use — they cost one broadcast-sized
-    scan and caching them would only add storage."""
-    import os
+    """Lazily build, checkpoint, and store one shared lattice
+    component: "pl", "cnts", "blk0", "used", "blk1", or "usedK"/"blkK"
+    for later EM rounds. The cheap vocab-bounded model projections
+    (model0/model1) are rebuilt from checkpointed inputs at each use —
+    they cost one broadcast-sized scan and storing them would only add
+    storage."""
+    import re
 
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _ULM_SHARED if k[0] != app]:
-        del _ULM_SHARED[k]
-    # realpath-normalized key (r14 ADVICE item 3, same as _QC_SHARED).
-    ent = _ULM_SHARED.setdefault(
-        (app, os.path.realpath(sf_dir), _ULM_BLOCK), {}
-    )
-    if name in ent:
-        return ent[name]
-    if name == "pl":
-        # SIZE-AWARE checkpoint policy (r14 100x-drill finding,
-        # SCALE.md §8c7): pl is the position×3 candidate explode —
-        # the one data-sized frame here. At 100x (75M rows, ~25M
-        # chars) materializing it into executor storage STARVED the
-        # downstream DP stage (usage pass 22 s lazy → 76 s with pl
-        # checkpointed; memory pressure, not compute), while at
-        # fixture scale the checkpoint saves q454's second gather
-        # (~7 s at sf0.1). So: checkpoint when the corpus is small
-        # enough that ~120 B/char of row storage stays a fraction of
-        # the heap (≤ _ULM_PL_CACHE_MAX_CHARS ≈ 2.4 GB), recompute
-        # otherwise — at real scale the explode is ALWAYS recomputed,
-        # a cheap map fused into the parquet scan. The policy affects
-        # only wall time; released values are identical either way.
-        n_chars = (
-            load_tables(spark, sf_dir)["documents"]
-            .agg(F.sum("n_chars"))
-            .collect()[0][0]
-            or 0
-        )
-        df = _ulm_pl(spark, sf_dir)
-        if n_chars <= _ULM_PL_CACHE_MAX_CHARS:
-            df = df.localCheckpoint(eager=True)
-        ent[name] = df
-        return df
-    elif name == "cnts":
-        df = _ulm_cnts(_ulm_component(spark, sf_dir, "pl"))
-    elif name == "blk0":
-        df = _ulm_block_arrays(
-            _ulm_component(spark, sf_dir, "pl"),
-            _ulm_model0(_ulm_component(spark, sf_dir, "cnts")),
-        )
-    elif name == "used":
-        df = _ulm_usage(
-            spark, sf_dir, _ulm_component(spark, sf_dir, "blk0")
-        )
-    elif name == "blk1":
-        df = _ulm_block_arrays(
-            _ulm_component(spark, sf_dir, "pl"),
-            _ulm_model1(
-                _ulm_component(spark, sf_dir, "cnts"),
-                _ulm_component(spark, sf_dir, "used"),
-            ),
-        )
-    elif (m := __import__("re").fullmatch(r"used(\d+)", name)) is not None:
-        # k-th usage recount: the optimal-segmentation count under the
-        # (k-1)-th re-estimated model — q470's later EM rounds. used1
-        # is the plain "used" component; usedK reads blk(K-1).
-        k = int(m.group(1))
-        dep = "used" if k == 1 else None
-        if dep is not None:
-            return _ulm_component(spark, sf_dir, dep)
-        df = _ulm_usage(
-            spark, sf_dir, _ulm_component(spark, sf_dir, f"blk{k - 1}")
-        )
-    elif (m := __import__("re").fullmatch(r"blk(\d+)", name)) is not None:
-        # k-th blocked arrays: under the model re-estimated from the
-        # k-th usage recount (blk0/blk1 are handled explicitly above).
-        k = int(m.group(1))
-        df = _ulm_block_arrays(
-            _ulm_component(spark, sf_dir, "pl"),
-            _ulm_model1(
-                _ulm_component(spark, sf_dir, "cnts"),
-                _ulm_component(spark, sf_dir, f"used{k}"),
-            ),
-        )
-    else:  # pragma: no cover - programming error
-        raise KeyError(name)
-    df = df.localCheckpoint(eager=True)
-    ent[name] = df
-    return df
+    if name == "used1":
+        name = "used"
+
+    def comp(dep: str) -> DataFrame:
+        return _ulm_component(spark, sf_dir, dep)
+
+    def build() -> DataFrame:
+        if name == "pl":
+            # SIZE-AWARE checkpoint policy (r14 100x-drill finding,
+            # SCALE.md §8c7): pl is the position×3 candidate explode —
+            # the one data-sized frame here. At 100x (75M rows, ~25M
+            # chars) materializing it into executor storage STARVED the
+            # downstream DP stage (usage pass 22 s lazy → 76 s with pl
+            # checkpointed; memory pressure, not compute), while at
+            # fixture scale the checkpoint saves q454's second gather
+            # (~7 s at sf0.1). So: checkpoint when the corpus is small
+            # enough that ~120 B/char of row storage stays a fraction of
+            # the heap (≤ _ULM_PL_CACHE_MAX_CHARS ≈ 2.4 GB), recompute
+            # otherwise — at real scale the explode is ALWAYS recomputed,
+            # a cheap map fused into the parquet scan. The policy affects
+            # only wall time; released values are identical either way.
+            n_chars = (
+                load_tables(spark, sf_dir)["documents"]
+                .agg(F.sum("n_chars"))
+                .collect()[0][0]
+                or 0
+            )
+            df = _ulm_pl(spark, sf_dir)
+            if n_chars <= _ULM_PL_CACHE_MAX_CHARS:
+                df = df.localCheckpoint(eager=True)
+            return df
+        if name == "cnts":
+            df = _ulm_cnts(comp("pl"))
+        elif name == "blk0":
+            df = _ulm_block_arrays(comp("pl"), _ulm_model0(comp("cnts")))
+        elif name == "used":
+            df = _ulm_usage(spark, sf_dir, comp("blk0"))
+        elif (m := re.fullmatch(r"used(\d+)", name)) is not None:
+            # k-th usage recount: the optimal-segmentation count under
+            # the (k-1)-th re-estimated model — q470's later EM rounds.
+            df = _ulm_usage(spark, sf_dir, comp(f"blk{int(m.group(1)) - 1}"))
+        elif (m := re.fullmatch(r"blk(\d+)", name)) is not None:
+            # k-th blocked arrays: under the model re-estimated from
+            # the k-th usage recount.
+            df = _ulm_block_arrays(
+                comp("pl"),
+                _ulm_model1(comp("cnts"), comp(f"used{m.group(1)}")),
+            )
+        else:  # pragma: no cover - programming error
+            raise KeyError(name)
+        return df.localCheckpoint(eager=True)
+
+    return session_store(spark, "ulm", sf_dir, name, build)
 
 
 def _ulm_arr(spark: SparkSession, sf_dir: str) -> DataFrame:

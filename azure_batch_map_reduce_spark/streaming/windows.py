@@ -321,6 +321,42 @@ def q85_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _purchase_click_join(
+    spark: SparkSession, sf_dir: str, how: str
+) -> DataFrame:
+    """Purchases joined to same-user clicks in the preceding hour, both
+    sides watermarked at 10 minutes — the interval stream-stream join
+    q87 (inner), q275 (left outer) and q364 (full outer) share. The
+    range predicate is what lets Spark evict each side's state at
+    (watermark − interval)."""
+    ev = events_stream(spark, sf_dir)
+    purchases = (
+        ev.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            "user_id",
+            F.col("ts").alias("purchase_ts"),
+        )
+        .withWatermark("purchase_ts", "10 minutes")
+    )
+    clicks = (
+        ev.filter(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user_id"),
+            F.col("ts").alias("click_ts"),
+        )
+        .withWatermark("click_ts", "10 minutes")
+    )
+    return purchases.join(
+        clicks,
+        (F.col("user_id") == F.col("c_user_id"))
+        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR"))
+        & (F.col("click_ts") <= F.col("purchase_ts")),
+        how,
+    )
+
+
 @query(
     "q87_stream_stream_join",
     oracle="""
@@ -346,32 +382,9 @@ def q87_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-stream join must buffer both streams forever. Under
     availableNow's single batch the emitted set is exactly the batch
     join (oracle)."""
-    ev = events_stream(spark, sf_dir)
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "10 minutes")
+    joined = _purchase_click_join(spark, sf_dir, "inner").select(
+        "purchase_id", "click_id", "user_id", "purchase_ts", "click_ts"
     )
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "10 minutes")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-        "inner",
-    ).select("purchase_id", "click_id", "user_id", "purchase_ts", "click_ts")
     return run_available_now(
         joined, "append",
         shuffle_partitions=stream_shuffle_partitions(spark, sf_dir),
@@ -913,32 +926,9 @@ def q275_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the outer-ness adds only a per-row matched bit to that state.
     Without the range condition Spark would reject the outer join
     outright rather than buffer forever."""
-    ev = events_stream(spark, sf_dir)
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "10 minutes")
+    joined = _purchase_click_join(spark, sf_dir, "leftOuter").select(
+        "purchase_id", "user_id", "purchase_ts", "click_id", "click_ts"
     )
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "10 minutes")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-        "leftOuter",
-    ).select("purchase_id", "user_id", "purchase_ts", "click_id", "click_ts")
     return run_available_now(
         joined, "append",
         shuffle_partitions=stream_shuffle_partitions(spark, sf_dir),
@@ -1475,32 +1465,7 @@ def q364_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     than buffer history. Reference contract: the two per-event
     streams are map-slot fan-outs; the watermark-settled merge is the
     reduce slot (``App.config:16-17``)."""
-    ev = events_stream(spark, sf_dir)
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "10 minutes")
-    )
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "10 minutes")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-        "fullOuter",
-    ).select(
+    joined = _purchase_click_join(spark, sf_dir, "fullOuter").select(
         "purchase_id",
         "purchase_ts",
         "click_id",

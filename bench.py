@@ -496,41 +496,25 @@ def main() -> None:
     times: dict[str, float] = {}
     honest: dict[str, float] = {}
 
-    # r15 (r14 verdict task 3): price the session-shared store builds
-    # EXPLICITLY. The warmup+min-of-3 protocol pays each family's
-    # one-time shared-store build (the ULM lattice store in text.py,
-    # the trainer feature store + default weight path in curation.py)
-    # inside the first family query's UNTIMED warm-up, so the regular
-    # rows price steady state only. These two ACCOUNTING ROWS make the
-    # one-time cost visible: each clears its store via the same hook
-    # the tests/drills use, then runs ONE cold fn()+sink of the
-    # family's canonical consumer (q443 builds the lattice store, q433
-    # the feature store + weight path). Additions-only — every
-    # pre-existing row keeps its protocol and meaning; cross-round
-    # total comparisons should subtract the `cold_store:` rows (they
-    # price work that earlier rounds ran in untimed warmup, not new
-    # work). The stores are left WARM afterwards, so the family rows
-    # below keep their steady-state semantics.
-    from azure_batch_map_reduce_spark.functions.curation import (
-        _qc_clear_shared,
-    )
-    from azure_batch_map_reduce_spark.functions.text import (
-        _ulm_clear_shared,
-    )
+    # Price the session-store builds explicitly. The warmup+min-of-3
+    # protocol pays each family's one-time store build (the trainer
+    # feature frame + default weight path, the ULM lattice) inside the
+    # first family query's UNTIMED warm-up, so the regular rows price
+    # steady state only. These ACCOUNTING ROWS make the one-time cost
+    # visible: each clears the whole session store, then runs ONE cold
+    # fn()+sink of the family's canonical consumer (q433 builds the
+    # trainer store, q443 the lattice store). Cross-round total
+    # comparisons should subtract the `cold_store:` rows: they price
+    # work that the regular rows run in untimed warm-up. The trainer row
+    # runs first, so only the cheaper trainer store is rebuilt later (in
+    # a headline row's untimed warm-up); the lattice store stays warm.
+    from azure_batch_map_reduce_spark.session import clear_session_store
 
-    for row, qname, clear in (
-        (
-            "cold_store:ulm_lattice(q443)",
-            "q443_unigram_lm_viterbi_segmentation",
-            _ulm_clear_shared,
-        ),
-        (
-            "cold_store:qc_trainer(q433)",
-            "q433_quality_classifier_training",
-            _qc_clear_shared,
-        ),
+    for row, qname in (
+        ("cold_store:qc_trainer(q433)", "q433_quality_classifier_training"),
+        ("cold_store:ulm_lattice(q443)", "q443_unigram_lm_viterbi_segmentation"),
     ):
-        clear()
+        clear_session_store()
         sink_s, honest_s = materialize(qname)
         times[row] = round(sink_s, 3)
         honest[row] = round(honest_s, 3)

@@ -42,7 +42,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from azure_batch_map_reduce_spark.registry import load_all
-from azure_batch_map_reduce_spark.session import get_spark
+from azure_batch_map_reduce_spark.session import clear_session_store, get_spark
 
 BASE = "/root/testdata/sf0.1"
 AMP_DIR = os.environ.get("SPARK_GRAFT_AMP_DIR", "/tmp/spark_graft_amp10")
@@ -308,9 +308,6 @@ def build_subst_amp(spark, out_dir: str, copies: int) -> None:
 def main_x100() -> int:
     registry = load_all()
     spark = get_spark(app_name="abmr-amp100-drill")
-    from azure_batch_map_reduce_spark.functions.text import (
-        _ulm_clear_shared,
-    )
 
     dirs = {"x1": BASE001}
     for copies, label in ((10, "x10"), (100, "x100")):
@@ -322,10 +319,10 @@ def main_x100() -> int:
         dirs[label] = d
 
     def run_once(name: str, sf_dir: str) -> tuple[float, int]:
-        # The ULM family memoizes its lattice per (app, sf_dir) — the
-        # drill must charge every run the FULL build, so the store is
-        # cleared alongside the SQL cache.
-        _ulm_clear_shared()
+        # The session store keeps the ULM lattice and the trainer
+        # features per (app, sf_dir) — the drill must charge every run
+        # the FULL build, so the store is cleared alongside the SQL cache.
+        clear_session_store()
         spark.catalog.clearCache()
         t0 = time.perf_counter()
         df = registry[name].fn(spark, sf_dir)
@@ -374,13 +371,10 @@ def main() -> int:
         open(geo_marker, "w").close()
 
     def run_once(name: str, sf_dir: str) -> float:
-        # Clear the ULM shared store so every drill run is charged the
-        # full lattice build (same rule as the --x100 mode).
-        from azure_batch_map_reduce_spark.functions.text import (
-            _ulm_clear_shared,
-        )
-
-        _ulm_clear_shared()
+        # Clear the session store so every drill run is charged the
+        # full lattice and trainer-feature builds (same rule as the
+        # --x100 mode).
+        clear_session_store()
         t0 = time.perf_counter()
         df = registry[name].fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()

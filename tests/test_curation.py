@@ -792,20 +792,22 @@ def test_qc_shared_store_lifecycle_and_equivalence(spark, sf_dir):
     order and values — so sharing cannot move any released number;
     (c) the clear hook empties the store."""
     from azure_batch_map_reduce_spark.functions.curation import (
-        _QC_SHARED,
-        _qc_clear_shared,
         _qc_obs,
         _qc_obs_shared,
     )
+    from azure_batch_map_reduce_spark.session import (
+        _STORE,
+        clear_session_store,
+    )
 
-    _qc_clear_shared()
+    clear_session_store()
     a = _qc_obs_shared(spark, sf_dir)
     n = a.count()
     assert n > 0
-    assert len(_QC_SHARED) == 1
+    assert len(_STORE) == 1
     spark.catalog.clearCache()
     b = _qc_obs_shared(spark, sf_dir, with_id=True)
-    assert len(_QC_SHARED) == 1, "second slice must reuse the memo"
+    assert len(_STORE) == 1, "second slice must reuse the memo"
     assert b.count() == n, "checkpointed data must survive clearCache"
     for kw in (
         {},
@@ -819,24 +821,22 @@ def test_qc_shared_store_lifecycle_and_equivalence(spark, sf_dir):
         r_rows = sorted(map(repr, raw.collect()))
         s_rows = sorted(map(repr, shared.collect()))
         assert r_rows == s_rows, f"slice {kw} must match the raw builder"
-    _qc_clear_shared()
-    assert not _QC_SHARED
+    clear_session_store()
+    assert not _STORE
 
 def test_qc_shared_path_and_multi_step_equivalence(spark, sf_dir):
     """r15 optimization-round pin for the trainer-family fused scans:
     (a) `_qc_train_shared_path` returns BIT-IDENTICAL (path, accs, n)
-    to a fresh `_qc_train` run, including when the cached path is
-    EXTENDED (2 steps cached, 4 requested — the warm-start must
+    to a fresh `_qc_train` run, including when the stored path is
+    EXTENDED (2 steps stored, 4 requested — the warm-start must
     reproduce the uncached arithmetic exactly); (b) `_qc_multi_step`'s
     fused conditional aggregates equal the per-slice scans they
     replaced — same quantized gradient integers, same correct/total
     counts, for full-frame, row-sliced and masked-xa specs; (c) the
-    shared clear hook empties the path memo too."""
+    store's clear hook empties the path entries too."""
     from pyspark.sql import functions as F
 
     from azure_batch_map_reduce_spark.functions.curation import (
-        _QC_PATH_SHARED,
-        _qc_clear_shared,
         _qc_margin,
         _qc_multi_step,
         _qc_obs_shared,
@@ -844,13 +844,17 @@ def test_qc_shared_path_and_multi_step_equivalence(spark, sf_dir):
         _qc_train_shared_path,
         _qc_update,
     )
+    from azure_batch_map_reduce_spark.session import (
+        _STORE,
+        clear_session_store,
+    )
 
-    _qc_clear_shared()
+    clear_session_store()
     obs = _qc_obs_shared(spark, sf_dir, with_id=True)
 
-    # (a) extend-and-slice: cache 2 steps, then request 4.
+    # (a) extend: store 2 steps, then request 4.
     p2, a2, _ = _qc_train_shared_path(spark, sf_dir, n_steps=2)
-    assert len(_QC_PATH_SHARED) == 1
+    assert {k[3] for k in _STORE} == {"obs", ("step", 1), ("step", 2)}
     p4, a4, n4 = _qc_train_shared_path(spark, sf_dir, n_steps=4)
     f4, fa4, fn4 = _qc_train(obs.select("xa", "y"), n_steps=4)
     assert p4 == f4 and a4 == fa4 and n4 == fn4
@@ -894,6 +898,31 @@ def test_qc_shared_path_and_multi_step_equivalence(spark, sf_dir):
         assert (got["nc"], got["n"]) == accs1[0], name
         assert _qc_update(w, got["gq"], got["n"]) == path1[0], name
 
-    # (c) the clear hook drops the path memo with the frame memo.
-    _qc_clear_shared()
-    assert not _QC_PATH_SHARED
+    # (c) the clear hook drops the path entries with the frame entry.
+    clear_session_store()
+    assert not _STORE
+
+
+def test_qc_multi_step_rejects_empty_slice(spark, sf_dir):
+    """A spec that selects no rows (an always-false slice, or an empty
+    frame) is a named error, not an ``int(None)`` or a division by
+    ``n = 0`` in the weight update."""
+    import pytest
+
+    from azure_batch_map_reduce_spark.functions.curation import (
+        _qc_multi_step,
+        _qc_obs_shared,
+    )
+
+    obs = _qc_obs_shared(spark, sf_dir, with_id=True)
+    w = [0.0] * 4
+    cases = [
+        (obs, {"name": "never", "w": w, "inc_sql": "false"}),
+        (obs.limit(0), {"name": "empty", "w": w}),
+    ]
+    for frame, spec in cases:
+        with pytest.raises(ValueError) as err:
+            _qc_multi_step(frame, [spec])
+        assert str(err.value) == (
+            f"_qc_multi_step: spec {spec['name']!r} selects no rows"
+        )

@@ -1839,17 +1839,17 @@ def test_q468_oof_encoding_excludes_own_fold(spark, sf_dir):
 
 def test_ulm_shared_store_lifecycle(spark, sf_dir):
     """r13 verdict task 1's cache-lifecycle pin: the shared lattice
-    component store memoizes per (application, sf_dir, block) and its
+    component store memoizes per (application, sf_dir) and its
     localCheckpointed frames survive `spark.catalog.clearCache()`
     (which clears only the SQL CacheManager) — the property the whole
     family sharing rests on. The clear hook empties the store."""
-    from azure_batch_map_reduce_spark.functions.text import (
-        _ULM_SHARED,
-        _ulm_clear_shared,
-        _ulm_component,
+    from azure_batch_map_reduce_spark.functions.text import _ulm_component
+    from azure_batch_map_reduce_spark.session import (
+        _STORE,
+        clear_session_store,
     )
 
-    _ulm_clear_shared()
+    clear_session_store()
     a = _ulm_component(spark, sf_dir, "blk0")
     n = a.count()
     assert n > 0
@@ -1857,8 +1857,8 @@ def test_ulm_shared_store_lifecycle(spark, sf_dir):
     b = _ulm_component(spark, sf_dir, "blk0")
     assert b is a, "memo must return the SAME checkpointed frame"
     assert b.count() == n, "checkpointed data must survive clearCache"
-    _ulm_clear_shared()
-    assert not _ULM_SHARED
+    clear_session_store()
+    assert not _STORE
 
 
 def test_q470_em_monotone_and_gate_fires(spark, sf_dir):
