@@ -8118,14 +8118,11 @@ def _qc_train(
     accs: list = []
     n_rows = None
     for k in range(1, n_steps + 1):
-        # r15: each step is ONE wide aggregate over the frame (the
-        # _qc_multi_step template with a single spec) instead of a
-        # posexplode + groupBy(dim) two-stage job — same quantized
-        # BIGINT gradient sums and counts (integer sums are order-
-        # free; dim-grouped vs per-dim-column is the same multiset
-        # per dim), one stage and no exchange per step. The subset
-        # filter becomes the spec's slice predicate (gated integer
-        # sums over the superset equal sums over the filtered frame).
+        # Each step is ONE wide aggregate over the frame (the
+        # _qc_multi_step template with a single spec): one stage and
+        # no exchange per step. The subset filter becomes the spec's
+        # slice predicate (gated integer sums over the superset equal
+        # sums over the filtered frame).
         g = _qc_multi_step(
             obs,
             [
@@ -8141,13 +8138,8 @@ def _qc_train(
         )[0]
         n_rows = g["n"]
         accs.append((g["nc"], n_rows))
-        gq = g["gq"]
-        # Mirror the oracle's update arithmetic exactly (q343 rule).
         step_lr = lrs[k - 1] if lrs is not None else lr
-        w = [
-            w[d - 1] - step_lr * (gq[d] / _QC_QSCALE / n_rows)
-            for d in range(1, dims_n + 1)
-        ]
+        w = _qc_update(w, g["gq"], n_rows, step_lr)
         path.append(list(w))
     return path, accs, n_rows
 

@@ -253,51 +253,69 @@ def _band_frame(mh: DataFrame) -> DataFrame:
     )
 
 
-def neardup_pairs(docs: DataFrame) -> DataFrame:
-    """(doc_a, doc_b, jaccard) near-duplicate pairs at jaccard ≥ 0.8 via
-    the MinHash/LSH pipeline described in :func:`q62_minhash_lsh_neardup`."""
+def _minhash_signatures(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The MinHash/LSH signature stage: ``(mh, w)`` — per doc, the 16
+    affine minhashes ``m0..m15`` of its md5-derived trigram ids, and
+    its trigram set ``sh``.
+
+    ``w`` comes back persisted: every caller joins it on both sides of
+    a pair. ``mh`` comes back unpersisted; a caller that branches on it
+    persists it. Deliberately TWO aggregations, not one fused: mixing
+    the 16 codegen'd min() columns with collect_set in a single agg
+    forces the whole aggregate onto the ObjectHashAggregate path
+    (measured ~2× slower cold than the two split aggs, which each use
+    their best implementation)."""
     tri = _trigram_rows(docs)
     # MinHash over duplicate shingles ≡ over the distinct set (min is
     # idempotent) — no dedup pass needed before hashing.
     ids = tri.select("doc_id", _hash48(F.col("s")).alias("wid"))
-    # Persist the two small per-doc intermediates: each feeds both sides
-    # of a self-join (bands⋈bands, w⋈candidates) and would otherwise be
-    # recomputed per branch. This is the signature table a production
-    # LSH pipeline materializes; size is O(n_docs), not O(corpus bytes).
-    # Deliberately TWO aggregations, not one fused: mixing the 16
-    # codegen'd min() columns with collect_set in a single agg forces the
-    # whole aggregate onto the ObjectHashAggregate path (measured ~2×
-    # slower cold than the two split aggs, which each use their best
-    # implementation).
-    mh = ids.groupBy("doc_id").agg(*_minhash_exprs(F.col("wid"))).persist()
+    mh = ids.groupBy("doc_id").agg(*_minhash_exprs(F.col("wid")))
     w = tri.groupBy("doc_id").agg(F.collect_set("s").alias("sh")).persist()
+    return mh, w
 
-    bands = _band_frame(mh)
 
-    a, b_ = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    wa = w.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    wb = w.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
+def _band_join(left: DataFrame, right: DataFrame) -> DataFrame:
+    """(doc_a, doc_b) with doc_a < doc_b for every LSH bucket a band
+    row of ``left`` shares with a band row of ``right`` (one row per
+    shared band; callers dedup)."""
+    a, b = left.alias("a"), right.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.bkey") == F.col("b.bkey"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    ).select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+
+
+def _jaccard_verified(cand: DataFrame, w: DataFrame, a: str, b: str) -> DataFrame:
+    """The candidate pairs ``(a, b)`` whose trigram sets have exact
+    Jaccard ≥ 0.8, with ``jaccard`` rounded half-up at 4 digits."""
+    wa = w.select(F.col("doc_id").alias(a), F.col("sh").alias("sh_a"))
+    wb = w.select(F.col("doc_id").alias(b), F.col("sh").alias("sh_b"))
     jac = half_up_ratio(
         F.size(F.array_intersect("sh_a", "sh_b")),
         F.size(F.array_union("sh_a", "sh_b")),
         4,
     )
     return (
-        cand.join(wa, "doc_a")
-        .join(wb, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        cand.join(wa, a)
+        .join(wb, b)
+        .select(a, b, jac.alias("jaccard"))
         .filter(F.col("jaccard") >= 0.8)
     )
+
+
+def neardup_pairs(docs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) near-duplicate pairs at jaccard ≥ 0.8 via
+    the MinHash/LSH pipeline described in :func:`q62_minhash_lsh_neardup`."""
+    mh, w = _minhash_signatures(docs)
+    # Persisted: the signature table feeds both sides of the bands
+    # self-join and would otherwise be recomputed per branch. This is
+    # the signature table a production LSH pipeline materializes; size
+    # is O(n_docs), not O(corpus bytes).
+    bands = _band_frame(mh.persist())
+    cand = _band_join(bands, bands).distinct()
+    return _jaccard_verified(cand, w, "doc_a", "doc_b")
 
 
 def _simhash_sql_bits() -> str:
@@ -523,7 +541,7 @@ def _loop_shuffle_partitions(
     O(diameter)-round loop over a bounded edge set pays that constant's
     scheduling overhead every round (guide §2.2).
 
-    Row width (r14 verdict task 5): derived from the frame's schema
+    Row width: derived from the frame's schema
     when given — UnsafeRow overhead (8 B header word + null bits) plus
     each field's estimated width (mirroring Catalyst's defaultSize per
     type) — with a 48 B floor covering shuffle serialization overhead;
@@ -586,7 +604,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     prev_sum = labels.agg(F.sum("label")).first()[0]
-    # Scale-adaptive loop partitioning (r14 optimization round): sym is
+    # Scale-adaptive loop partitioning: sym is
     # persisted and already materialized by the labels build, so the
     # count is a cache read. The session conf is restored after the
     # loop; every round's result is localCheckpointed, so no lazy
@@ -818,12 +836,8 @@ def q100_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     are precomputed tables maintained by each ingest — here both sides
     are derived in-query so the oracle can replay them."""
     docs = _spread(load_tables(spark, sf_dir)["documents"], "doc_id")
-    tri = _trigram_rows(docs)
-    ids = tri.select("doc_id", _hash48(F.col("s")).alias("wid"))
-    mh = ids.groupBy("doc_id").agg(*_minhash_exprs(F.col("wid"))).persist()
-    w = tri.groupBy("doc_id").agg(F.collect_set("s").alias("sh")).persist()
-
-    bands = _band_frame(mh)
+    mh, w = _minhash_signatures(docs)
+    bands = _band_frame(mh.persist())
     is_batch = lambda c: c % 10 == 7  # noqa: E731
     a = bands.filter(is_batch(F.col("doc_id"))).alias("a")
     b_ = bands.alias("b")
@@ -840,19 +854,7 @@ def q100_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    wa = w.select(F.col("doc_id").alias("batch_doc"), F.col("sh").alias("sh_a"))
-    wb = w.select(F.col("doc_id").alias("other_doc"), F.col("sh").alias("sh_b"))
-    jac = half_up_ratio(
-        F.size(F.array_intersect("sh_a", "sh_b")),
-        F.size(F.array_union("sh_a", "sh_b")),
-        4,
-    )
-    return (
-        cand.join(wa, "batch_doc")
-        .join(wb, "other_doc")
-        .select("batch_doc", "other_doc", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.8)
-    )
+    return _jaccard_verified(cand, w, "batch_doc", "other_doc")
 
 
 @query(
@@ -908,6 +910,56 @@ def q111_fuzzy_blocked_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 PPJOIN_TAU = 0.6  # Jaccard threshold for the prefix-filtered join
+
+
+def _ppjoin_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, ts): each document's distinct word-trigram shingles as
+    xxhash64 longs, sorted — the persisted set frame of the PPJoin
+    self-joins (q150, q228). Documents under three words are dropped.
+
+    Tiny parquet inputs bin-pack to ONE partition, so the frame fans out
+    before the shingling expression runs. Shingles are hashed to int64
+    immediately: prefix rows, join keys and the verify arrays all
+    shuffle as longs instead of ~25-char strings (collision odds over a
+    ~30k vocab are ~1e-11 — irrelevant next to the 8× shuffle-width
+    saving). The sorted hash order is the global token order the
+    prefix filter needs."""
+    docs = load_tables(spark, sf_dir)["documents"]
+    words = (
+        docs.select("doc_id", F.split("text", " ").alias("w"))
+        .filter(F.size("w") >= 3)
+        .repartition(32, "doc_id")
+    )
+    return words.select(
+        "doc_id",
+        F.array_sort(
+            F.array_distinct(
+                F.transform(
+                    F.sequence(F.lit(1), F.size("w") - 2),
+                    lambda i: F.xxhash64(
+                        F.concat_ws(
+                            " ",
+                            F.element_at("w", i),
+                            F.element_at("w", i + 1),
+                            F.element_at("w", i + 2),
+                        )
+                    ),
+                )
+            )
+        ).alias("ts"),
+    ).persist()
+
+
+def _pair_shingles(cands: DataFrame, shingled: DataFrame) -> DataFrame:
+    """Candidate pairs ``(doc_i, doc_j)`` joined back to both documents'
+    shingle arrays ``ts_i`` and ``ts_j`` for exact verification."""
+    return cands.join(
+        shingled.select(F.col("doc_id").alias("doc_i"), F.col("ts").alias("ts_i")),
+        "doc_i",
+    ).join(
+        shingled.select(F.col("doc_id").alias("doc_j"), F.col("ts").alias("ts_j")),
+        "doc_j",
+    )
 
 
 @query(
@@ -971,36 +1023,7 @@ def q150_prefix_filter_simjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the shingle arrays twice. Compare q62 (MinHash LSH):
     prefix filtering is exact-recall, LSH is probabilistic.
     """
-    docs = load_tables(spark, sf_dir)["documents"]
-    # Tiny parquet inputs bin-pack to ONE partition; fan out before the
-    # shingling expression so it runs in parallel. Shingles are hashed
-    # to int64 (xxhash64) immediately: prefix rows, join keys, and the
-    # verify arrays all shuffle as longs instead of ~25-char strings
-    # (collision odds over a ~30k vocab are ~1e-11 — irrelevant next to
-    # the 8× shuffle-width saving).
-    words = (
-        docs.select("doc_id", F.split("text", " ").alias("w"))
-        .filter(F.size("w") >= 3)
-        .repartition(32, "doc_id")
-    )
-    shingled = words.select(
-        "doc_id",
-        F.array_sort(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("w") - 2),
-                    lambda i: F.xxhash64(
-                        F.concat_ws(
-                            " ",
-                            F.element_at("w", i),
-                            F.element_at("w", i + 1),
-                            F.element_at("w", i + 2),
-                        )
-                    ),
-                )
-            )
-        ).alias("ts"),
-    ).persist()
+    shingled = _ppjoin_shingles(spark, sf_dir)
     # Prefix filtering is correct under ANY fixed global total order of
     # tokens — two sets with J >= tau provably share an element of their
     # first n - ceil(tau*n) + 1 tokens in that order. The shingle arrays
@@ -1033,18 +1056,7 @@ def q150_prefix_filter_simjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     verified = (
-        cands.join(
-            shingled.select(
-                F.col("doc_id").alias("doc_i"), F.col("ts").alias("ts_i")
-            ),
-            "doc_i",
-        )
-        .join(
-            shingled.select(
-                F.col("doc_id").alias("doc_j"), F.col("ts").alias("ts_j")
-            ),
-            "doc_j",
-        )
+        _pair_shingles(cands, shingled)
         .withColumn(
             "n_common", F.size(F.array_intersect("ts_i", "ts_j")).cast("long")
         )
@@ -1178,30 +1190,7 @@ def q228_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning at the LOOSEST threshold; counts per band are a bounded
     rollup). The jaccard-vs-threshold comparison cross-multiplies
     integer set sizes — no float enters any band decision."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    words = (
-        docs.select("doc_id", F.split("text", " ").alias("w"))
-        .filter(F.size("w") >= 3)
-        .repartition(32, "doc_id")
-    )
-    shingled = words.select(
-        "doc_id",
-        F.array_sort(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("w") - 2),
-                    lambda i: F.xxhash64(
-                        F.concat_ws(
-                            " ",
-                            F.element_at("w", i),
-                            F.element_at("w", i + 1),
-                            F.element_at("w", i + 2),
-                        )
-                    ),
-                )
-            )
-        ).alias("ts"),
-    ).persist()
+    shingled = _ppjoin_shingles(spark, sf_dir)
     # Prefix at tau=0.5: p = n - ceil(n/2) + 1 = n div 2 + 1
     prefix = shingled.select(
         "doc_id",
@@ -1221,15 +1210,12 @@ def q228_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    wa = shingled.select(F.col("doc_id").alias("doc_i"), F.col("ts").alias("ts_i"))
-    wb = shingled.select(F.col("doc_id").alias("doc_j"), F.col("ts").alias("ts_j"))
     inter = F.size(F.array_intersect("ts_i", "ts_j")).cast("long")
     uni = (
         F.size("ts_i").cast("long") + F.size("ts_j").cast("long") - inter
     )
     pairs = (
-        cands.join(wa, "doc_i")
-        .join(wb, "doc_j")
+        _pair_shingles(cands, shingled)
         .select(inter.alias("i"), uni.alias("u"))
         .where(F.col("i") * 2 > F.col("u"))
     )
@@ -2852,26 +2838,9 @@ def q396_blocking_quality_metrics(spark: SparkSession, sf_dir: str) -> DataFrame
         ),
         "doc_id",
     )
-    tri = _trigram_rows(docs)
-    ids = tri.select("doc_id", _hash48(F.col("s")).alias("wid"))
-    mh = ids.groupBy("doc_id").agg(*_minhash_exprs(F.col("wid")))
-    w = tri.groupBy("doc_id").agg(F.collect_set("s").alias("sh")).persist()
+    mh, w = _minhash_signatures(docs)
     bands = _band_frame(mh)
-    a, b_ = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-        .persist()
-    )
+    cand = _band_join(bands, bands).distinct().persist()
     wa = w.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     wb = w.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     truth = (
@@ -2935,24 +2904,8 @@ def _inc_band_candidates(bands: DataFrame) -> DataFrame:
     is_delta = lambda c: F.col(c) % _INC_DELTA_MOD == 7
     d_bands = bands.where(is_delta("doc_id"))
     base_bands = bands.where(~is_delta("doc_id"))
-    da, ba = d_bands.alias("a"), bands.alias("b")
-    p1 = da.join(
-        ba,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bkey") == F.col("b.bkey"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-    )
-    bb, db = base_bands.alias("a"), d_bands.alias("b")
-    p2 = bb.join(
-        db,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bkey") == F.col("b.bkey"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-    )
+    p1 = _band_join(d_bands, bands)
+    p2 = _band_join(base_bands, d_bands)
     return p1.unionAll(p2).distinct()
 
 
@@ -3015,11 +2968,8 @@ def q399_incremental_neardup_maintenance(spark: SparkSession, sf_dir: str) -> Da
     (``App.config:16``); pair append = reduce slot
     (``App.config:17``)."""
     docs = _spread(load_tables(spark, sf_dir)["documents"], "doc_id")
-    tri = _trigram_rows(docs)
-    ids = tri.select("doc_id", _hash48(F.col("s")).alias("wid"))
-    mh = ids.groupBy("doc_id").agg(*_minhash_exprs(F.col("wid"))).persist()
-    w = tri.groupBy("doc_id").agg(F.collect_set("s").alias("sh")).persist()
-    bands = _band_frame(mh).persist()
+    mh, w = _minhash_signatures(docs)
+    bands = _band_frame(mh.persist()).persist()
     is_delta = lambda c: F.col(c) % _INC_DELTA_MOD == 7
     cand = _inc_band_candidates(bands)
     wa = w.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))

@@ -1698,35 +1698,16 @@ def bpe_merge_symbols(s, l, r):
     )
 
 
-@query(
-    "q239_bpe_merge_training",
-    oracle=_bpe_oracle(),
-    tags=("text", "tokenizer", "bpe", "training", "iterative"),
-)
-def q239_bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-pair-encoding tokenizer training, 3 merge rounds: count
-    adjacent symbol-pair frequencies over the corpus, adopt the most
-    frequent pair as a merge (ties: lexicographic on the pair), rewrite
-    the vocabulary, repeat. Emits each round's learned merge with its
-    pair count — the merge table a BPE tokenizer ships.
+def _bpe_train(
+    spark: SparkSession, sf_dir: str
+) -> tuple[list[DataFrame], DataFrame]:
+    """The 3-round BPE trainer shared by q239 and q246: returns the
+    three rounds' merge rows ``(iter, lhs, rhs, merged, pair_count)``
+    and the word frame ``(w, freq, s)`` after the third merge.
 
-    Words are represented as '|'-PREFIXED symbol strings ('abc' →
-    '|a|b|c'); a merge round rewrites each word with the greedy
-    left-to-right fold in :func:`bpe_merge_symbols` (see its docstring
-    for why literal replace — with or without a trailing sentinel — is
-    subtly wrong). Both engines run the identical sequential lambda, so
-    parity is exact (integer counts, string ops, zero floats).
-
-    Scale posture: the corpus is touched ONCE (explode → word-histogram
-    shuffle with map-side combine) — the same word-type-grain
-    optimization production BPE trainers use. Every merge round then
-    runs at vocabulary grain: pair counting is explode → partial+final
-    sum per distinct word (not per occurrence), the winning pair is a
-    TakeOrdered(1), and the rewrite is a 1-row broadcast cross join +
-    map-side replace. A 100 TB corpus costs one shuffle; rounds cost
-    O(|vocab|) each. Reference contract: the pluggable map slot
-    (``App.config:16``) is the per-word rewrite; the reduce slot
-    (``App.config:17``) is the pair-count consolidation."""
+    Each round counts adjacent symbol pairs at word-type grain, adopts
+    the most frequent pair (ties: lexicographic on the pair) and
+    rewrites every word with :func:`bpe_merge_symbols`."""
     docs = load_tables(spark, sf_dir)["documents"]
     words = (
         docs.select(
@@ -1770,12 +1751,12 @@ def q239_bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("freq").alias("cnt"))
         )
 
-    outs = []
+    merges = []
     for i in range(3):
         best = pair_counts(wf).orderBy(
             F.desc("cnt"), F.asc("l"), F.asc("r")
         ).limit(1)
-        outs.append(
+        merges.append(
             best.select(
                 F.lit(i + 1).alias("iter"),
                 F.col("l").alias("lhs"),
@@ -1789,8 +1770,40 @@ def q239_bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
             "freq",
             bpe_merge_symbols(F.col("s"), F.col("l"), F.col("r")).alias("s"),
         )
+    return merges, wf
 
-    return outs[0].unionAll(outs[1]).unionAll(outs[2]).orderBy("iter")
+
+@query(
+    "q239_bpe_merge_training",
+    oracle=_bpe_oracle(),
+    tags=("text", "tokenizer", "bpe", "training", "iterative"),
+)
+def q239_bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Byte-pair-encoding tokenizer training, 3 merge rounds: count
+    adjacent symbol-pair frequencies over the corpus, adopt the most
+    frequent pair as a merge (ties: lexicographic on the pair), rewrite
+    the vocabulary, repeat. Emits each round's learned merge with its
+    pair count — the merge table a BPE tokenizer ships.
+
+    Words are represented as '|'-PREFIXED symbol strings ('abc' →
+    '|a|b|c'); a merge round rewrites each word with the greedy
+    left-to-right fold in :func:`bpe_merge_symbols` (see its docstring
+    for why literal replace — with or without a trailing sentinel — is
+    subtly wrong). Both engines run the identical sequential lambda, so
+    parity is exact (integer counts, string ops, zero floats).
+
+    Scale posture: the corpus is touched ONCE (explode → word-histogram
+    shuffle with map-side combine) — the same word-type-grain
+    optimization production BPE trainers use. Every merge round then
+    runs at vocabulary grain: pair counting is explode → partial+final
+    sum per distinct word (not per occurrence), the winning pair is a
+    TakeOrdered(1), and the rewrite is a 1-row broadcast cross join +
+    map-side replace. A 100 TB corpus costs one shuffle; rounds cost
+    O(|vocab|) each. Reference contract: the pluggable map slot
+    (``App.config:16``) is the per-word rewrite; the reduce slot
+    (``App.config:17``) is the pair-count consolidation."""
+    merges, _ = _bpe_train(spark, sf_dir)
+    return merges[0].unionAll(merges[1]).unionAll(merges[2]).orderBy("iter")
 
 
 def _bpe_apply_oracle() -> str:
@@ -1838,51 +1851,7 @@ def q246_bpe_compression_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge rounds at vocab grain) plus a single occurrence-weighted
     final aggregate — frequencies multiply back so no per-occurrence
     row ever materializes."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    words = (
-        docs.select(
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col("text")), "[^a-z]+"),
-                    lambda x: x != F.lit(""),
-                )
-            ).alias("w")
-        )
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    wf = words.withColumn(
-        "s", F.regexp_replace(F.col("w"), "(.)", r"|$1")
-    ).persist()
-
-    def pair_counts(frame: DataFrame) -> DataFrame:
-        syms = F.filter(F.split(F.col("s"), "[|]"), lambda x: x != F.lit(""))
-        prs = F.when(
-            F.size(syms) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size(syms) - 1),
-                lambda i: F.struct(
-                    F.element_at(syms, i).alias("l"),
-                    F.element_at(syms, i + 1).alias("r"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<l:string,r:string>>"))
-        return (
-            frame.select("freq", F.explode(prs).alias("p"))
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("freq").alias("cnt"))
-        )
-
-    for _ in range(3):
-        best = pair_counts(wf).orderBy(
-            F.desc("cnt"), F.asc("l"), F.asc("r")
-        ).limit(1)
-        wf = wf.crossJoin(F.broadcast(best)).select(
-            "w",
-            "freq",
-            bpe_merge_symbols(F.col("s"), F.col("l"), F.col("r")).alias("s"),
-        )
-
+    _, wf = _bpe_train(spark, sf_dir)
     n_sym = F.size(F.filter(F.split(F.col("s"), "[|]"), lambda x: x != F.lit("")))
     stats = wf.agg(
         F.sum("freq").cast("long").alias("n_words"),
@@ -6002,7 +5971,7 @@ def _ulm_pl(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = (
         load_tables(spark, sf_dir)["documents"]
         .select("doc_id", "source", "text", F.length("text").alias("n"))
-        # Empty-doc guard (r12 ADVICE item 2): Spark's sequence(1, 0)
+        # Empty-doc guard: Spark's sequence(1, 0)
         # is the DESCENDING [1, 0] while DuckDB's generate_series(1, 0)
         # is empty, so a length-0 doc would inject an empty-string
         # piece into the Spark-side vocabulary and shift every smoothed

@@ -3556,6 +3556,31 @@ def _ols3_formulas() -> dict[str, str]:
 _OLS3 = _ols3_formulas()
 
 
+def _ols_moment_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row of exact BIGINT moment sums over lineitem's scaled-integer
+    observations x1 = quantity, x2 = discount in basis points, y = price
+    in whole dollars: n, s1, s2, s11, s12, s22, sy, s1y, s2y, syy. A
+    caller that never reads a sum leaves it to column pruning."""
+    li = load_tables(spark, sf_dir)["lineitem"]
+    obs = li.select(
+        F.col("l_quantity").cast("long").alias("x1"),
+        F.round(F.col("l_discount") * 10000).cast("long").alias("x2"),
+        F.round(F.col("l_extendedprice")).cast("long").alias("y"),
+    )
+    return obs.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("x1").alias("s1"),
+        F.sum("x2").alias("s2"),
+        F.sum(F.col("x1") * F.col("x1")).alias("s11"),
+        F.sum(F.col("x1") * F.col("x2")).alias("s12"),
+        F.sum(F.col("x2") * F.col("x2")).alias("s22"),
+        F.sum("y").alias("sy"),
+        F.sum(F.col("x1") * F.col("y")).alias("s1y"),
+        F.sum(F.col("x2") * F.col("y")).alias("s2y"),
+        F.sum(F.col("y") * F.col("y")).alias("syy"),
+    )
+
+
 @query(
     "q341_multiple_regression_closed_form",
     oracle=f"""
@@ -3612,32 +3637,13 @@ def q341_multiple_regression_closed_form(
     normal-equations tradeoff (p small, n huge). Reference contract:
     per-row moment accumulation = map slot (``App.config:16``);
     system solve = reduce slot (``App.config:17``)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    obs = li.select(
-        F.col("l_quantity").cast("long").alias("x1"),
-        F.round(F.col("l_discount") * 10000).cast("long").alias("x2"),
-        F.round(F.col("l_extendedprice")).cast("long").alias("y"),
-    )
-    sums = obs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x1").alias("s1"),
-        F.sum("x2").alias("s2"),
-        F.sum(F.col("x1") * F.col("x1")).alias("s11"),
-        F.sum(F.col("x1") * F.col("x2")).alias("s12"),
-        F.sum(F.col("x2") * F.col("x2")).alias("s22"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x1") * F.col("y")).alias("s1y"),
-        F.sum(F.col("x2") * F.col("y")).alias("s2y"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
+    sums = _ols_moment_sums(spark, sf_dir)
     rows = [
         ("intercept", _OLS3["b0"], 1),
         ("quantity", _OLS3["b1"], 2),
         ("discount_bp", _OLS3["b2"], 3),
         ("r_squared", _OLS3["r2"], 4),
     ]
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
-
     out = sums.select(
         F.explode(
             F.array(
@@ -3737,25 +3743,7 @@ def q342_ridge_regularization_path(
     passes. Reference contract: moment accumulation = map slot
     (``App.config:16``); path solve = reduce slot
     (``App.config:17``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
-
-    li = load_tables(spark, sf_dir)["lineitem"]
-    obs = li.select(
-        F.col("l_quantity").cast("long").alias("x1"),
-        F.round(F.col("l_discount") * 10000).cast("long").alias("x2"),
-        F.round(F.col("l_extendedprice")).cast("long").alias("y"),
-    )
-    sums = obs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x1").alias("s1"),
-        F.sum("x2").alias("s2"),
-        F.sum(F.col("x1") * F.col("x1")).alias("s11"),
-        F.sum(F.col("x1") * F.col("x2")).alias("s12"),
-        F.sum(F.col("x2") * F.col("x2")).alias("s22"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x1") * F.col("y")).alias("s1y"),
-        F.sum(F.col("x2") * F.col("y")).alias("s2y"),
-    )
+    sums = _ols_moment_sums(spark, sf_dir)
     structs = []
     for lam in _RIDGE_LAMBDAS:
         fs = _ridge2_formulas(f"CAST({lam} AS DOUBLE)")

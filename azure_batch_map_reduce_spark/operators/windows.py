@@ -8,7 +8,7 @@ are deterministic under any partitioning.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from azure_batch_map_reduce_spark.catalog import load_tables
 from azure_batch_map_reduce_spark.operators.ranks import (
@@ -2608,6 +2608,45 @@ def q251_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(day, x): the number of events on each UTC day, as a double."""
+    events = load_tables(spark, sf_dir)["events"]
+    return events.groupBy(
+        F.date_trunc("day", F.col("ts")).alias("day")
+    ).agg(F.count(F.lit(1)).cast("double").alias("x"))
+
+
+def _day_ordered(field: str) -> Column:
+    """Aggregate over :func:`_daily_counts`: its ``field`` (``"day"`` or
+    ``"x"``) collected into one array in day order."""
+    return F.transform(
+        F.array_sort(F.collect_list(F.struct("day", "x"))),
+        lambda s: s.getField(field),
+    )
+
+
+def _forecast_release(folded: DataFrame, first: int, offset: int) -> DataFrame:
+    """(day, actual, forecast, residual) for days ``first``.. of a
+    smoother's fold: ``folded`` carries the series ``days``/``xs`` and
+    the accumulator ``acc``, which holds day i's one-step-ahead
+    forecast at position ``i + offset``. Values round at 4 digits, the
+    residual signed-zero-safe."""
+    out = folded.select(
+        F.explode(F.sequence(F.lit(first), F.size("xs"))).alias("i"),
+        "days",
+        "xs",
+        "acc",
+    )
+    actual = F.element_at("xs", F.col("i").cast("int"))
+    forecast = F.element_at("acc", (F.col("i") + offset).cast("int"))
+    return out.select(
+        F.element_at("days", F.col("i").cast("int")).alias("day"),
+        F.round(actual, 4).alias("actual"),
+        F.round(forecast, 4).alias("forecast"),
+        round_nz(actual - forecast, 4).alias("residual"),
+    ).orderBy("day")
+
+
 _ACF_MAX_LAG = 7
 
 
@@ -2668,16 +2707,8 @@ def q279_acf_daily_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFram
     self-join; ACF over the daily rollup is free. Reference contract:
     per-event day bucketing = map slot (``App.config:16``); series
     assembly = reduce slot (``App.config:17``)."""
-    events = load_tables(spark, sf_dir)["events"]
-    daily = events.groupBy(
-        F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.count(F.lit(1)).cast("double").alias("x"))
-    series = daily.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "x"))),
-            lambda s: s.getField("x"),
-        ).alias("arr"),
-        F.count(F.lit(1)).alias("n"),
+    series = _daily_counts(spark, sf_dir).agg(
+        _day_ordered("x").alias("arr"), F.count(F.lit(1)).alias("n")
     )
     stats = series.withColumn(
         "m",
@@ -2988,19 +3019,8 @@ def q298_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape. Reference contract: per-event day bucketing = map slot
     (``App.config:16``); series assembly + smoothing = reduce slot
     (``App.config:17``)."""
-    events = load_tables(spark, sf_dir)["events"]
-    daily = events.groupBy(
-        F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.count(F.lit(1)).cast("double").alias("x"))
-    series = daily.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "x"))),
-            lambda s: s.getField("day"),
-        ).alias("days"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "x"))),
-            lambda s: s.getField("x"),
-        ).alias("xs"),
+    series = _daily_counts(spark, sf_dir).agg(
+        _day_ordered("day").alias("days"), _day_ordered("x").alias("xs")
     )
     a, b = _HOLT_ALPHA, _HOLT_BETA
     folded = series.withColumn(
@@ -3030,26 +3050,7 @@ def q298_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     )
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
-
-    out = folded.select(
-        F.explode(F.sequence(F.lit(2), F.size("xs"))).alias("i"),
-        "days",
-        "xs",
-        "acc",
-    )
-    return out.select(
-        F.element_at("days", F.col("i").cast("int")).alias("day"),
-        F.round(F.element_at("xs", F.col("i").cast("int")), 4).alias("actual"),
-        F.round(F.element_at("acc", (F.col("i") + 1).cast("int")), 4).alias(
-            "forecast"
-        ),
-        round_nz(
-            F.element_at("xs", F.col("i").cast("int"))
-            - F.element_at("acc", (F.col("i") + 1).cast("int")),
-            4,
-        ).alias("residual"),
-    ).orderBy("day")
+    return _forecast_release(folded, 2, 1)
 
 
 @query(
@@ -3283,21 +3284,8 @@ def q335_holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions the same fold by key. Reference contract: day
     bucketing = map slot (``App.config:16``); series assembly +
     smoothing = reduce slot (``App.config:17``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
-
-    events = load_tables(spark, sf_dir)["events"]
-    daily = events.groupBy(
-        F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.count(F.lit(1)).cast("double").alias("x"))
-    series = daily.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "x"))),
-            lambda s: s.getField("day"),
-        ).alias("days"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "x"))),
-            lambda s: s.getField("x"),
-        ).alias("xs"),
+    series = _daily_counts(spark, sf_dir).agg(
+        _day_ordered("day").alias("days"), _day_ordered("x").alias("xs")
     ).where(F.size("xs") >= _HW_P * 2 + 1)
     week1 = sum(
         (F.element_at("xs", i) for i in range(2, _HW_P + 1)),
@@ -3355,26 +3343,7 @@ def q335_holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     )
-    out = folded.select(
-        F.explode(F.sequence(F.lit(_HW_P + 1), F.size("xs"))).alias("i"),
-        "days",
-        "xs",
-        "acc",
-    )
-    return out.select(
-        F.element_at("days", F.col("i").cast("int")).alias("day"),
-        F.round(F.element_at("xs", F.col("i").cast("int")), 4).alias(
-            "actual"
-        ),
-        F.round(F.element_at("acc", (F.col("i") + 2).cast("int")), 4).alias(
-            "forecast"
-        ),
-        round_nz(
-            F.element_at("xs", F.col("i").cast("int"))
-            - F.element_at("acc", (F.col("i") + 2).cast("int")),
-            4,
-        ).alias("residual"),
-    ).orderBy("day")
+    return _forecast_release(folded, _HW_P + 1, 2)
 
 
 _UPA_FIRST_BP = 4000  # U-shaped: 40% first touch, 40% last, 20% middle
@@ -3660,16 +3629,8 @@ def q372_ljung_box_whiteness(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic with a bounded cumulative frame. Reference contract:
     day counting = map slot (``App.config:16``); portmanteau
     consolidation = reduce slot (``App.config:17``)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    daily = ev.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
-        F.count(F.lit(1)).cast("double").alias("x")
-    )
-    series = daily.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "x"))),
-            lambda s: s.getField("x"),
-        ).alias("arr"),
-        F.count(F.lit(1)).alias("n"),
+    series = _daily_counts(spark, sf_dir).agg(
+        _day_ordered("x").alias("arr"), F.count(F.lit(1)).alias("n")
     )
     m = F.aggregate(F.col("arr"), F.lit(0.0), lambda a, b: a + b) / F.col("n")
     stats = series.select("arr", "n", m.alias("m"))

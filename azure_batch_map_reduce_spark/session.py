@@ -16,6 +16,7 @@ import contextlib
 import os
 import re
 import sysconfig
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -71,35 +72,52 @@ def clear_session_store() -> None:
     _STORE.clear()
 
 
+# Open shuffle-partition scopes: id(session) -> [owner thread id, depth].
+_SCOPES: dict[int, list] = {}
+_SCOPES_LOCK = threading.Lock()
+
+
 @contextlib.contextmanager
 def scoped_shuffle_partitions(spark: SparkSession, n: int | None):
     """Pin ``spark.sql.shuffle.partitions`` to ``n`` for the scope and
     restore the previous value on exit (success AND failure paths) —
     the ONE definition of the get/set/finally pattern the iterative
-    loops and streaming runs share (r14 ADVICE item 2: the repeated
-    inline blocks drifted apart; this prevents that).
+    loops and streaming runs share, so the copies cannot drift apart.
 
     ``n=None`` is a no-op scope (callers with a conditional pin keep
     one code path).
 
-    Concurrency contract (documented where the pattern is defined, per
-    the same ADVICE item): the session conf is GLOBAL to the
-    SparkSession, so a scope is only sound while this session executes
-    queries single-threaded — a parallel query planned inside the
-    window would silently inherit the pinned value. Every harness in
-    this repo (bench.py, the differential runners, the drills) runs
-    queries sequentially on the session; guide §2.6 thread-pool
-    overlap must NOT be combined with these scopes.
+    The session conf is GLOBAL to the SparkSession, so a scope is only
+    sound while one thread runs queries on the session — a parallel
+    query planned inside the window would silently inherit the pinned
+    value. A thread that opens a scope on a session while another
+    thread's scope on it is open gets a ``RuntimeError``; scopes nest
+    freely on one thread.
     """
     if n is None:
         yield
         return
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(int(n)))
+    key, me = id(spark), threading.get_ident()
+    with _SCOPES_LOCK:
+        owner = _SCOPES.setdefault(key, [me, 0])
+        if owner[0] != me:
+            raise RuntimeError(
+                f"scoped_shuffle_partitions: thread {me} opened a scope while "
+                f"thread {owner[0]} holds one open on the same session"
+            )
+        owner[1] += 1
     try:
-        yield
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(int(n)))
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        with _SCOPES_LOCK:
+            owner[1] -= 1
+            if not owner[1]:
+                del _SCOPES[key]
 
 
 def autoscale_conf(

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Benchmark: run the headline queries at $SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[$SPARK_GRAFT_CPUS]; the FINAL stdout line is a compact
-JSON summary ({metric, value, value_honest, unit, sf, n_queries});
+JSON summary ({metric, value, value_honest, value_ex_cold,
+value_honest_ex_cold, unit, sf, n_queries});
 full per-query times print on the line before it and land in
 BENCH_DETAIL.local.json — an UNCOMMITTED default, so env-less runs
 (the driver's, the judge's) leave the committed round artifact alone
@@ -430,17 +431,15 @@ def _load_1min() -> float:
 
 
 def make_materializer(spark, registry, sf_dir):
-    """The ONE definition of the per-query measurement (shared with
-    scripts/bench_subset.py — r14 ADVICE item 4: the subset A/B tool
-    had re-implemented this by hand, a drift risk). Returns
+    """The ONE definition of the per-query measurement, shared with
+    scripts/bench_subset.py so the two tools cannot drift. Returns
     ``materialize(name) -> (sink_sec, honest_sec)``: ``sink_sec``
-    times only the noop write of the built plan (the r1+ comparable
-    protocol); ``honest_sec`` times fn()+write together, so queries
-    that run eager loops (localCheckpoints, parameter-server
-    collects) INSIDE fn() carry their real wall cost in the artifact
-    (r11 verdict task 1). Jobs are labelled per guide §1.5 and the
-    label is always reset afterwards so it cannot stick to later
-    jobs in the session."""
+    times only the noop write of the built plan (comparable with every
+    committed BENCH_r*.json); ``honest_sec`` times fn()+write together, so
+    queries that run eager loops (localCheckpoints, parameter-server
+    collects) INSIDE fn() carry their real wall cost in the artifact.
+    Each run's jobs carry a per-query description, which is always
+    reset afterwards so it cannot stick to later jobs in the session."""
 
     def materialize(name: str) -> tuple[float, float]:
         spark.sparkContext.setJobDescription(f"bench: {name}")
@@ -457,14 +456,29 @@ def make_materializer(spark, registry, sf_dir):
     return materialize
 
 
+def steady_time(spark, materialize, name: str) -> tuple[float, float]:
+    """The steady-state protocol for one query, shared with
+    scripts/bench_subset.py: one untimed warm-up run absorbs codegen,
+    JIT and scan-cache effects, then the best of THREE timed runs is
+    kept — min-of-N filters scheduler and noisy-neighbour jitter
+    (±25% run-to-run on a shared host) while still timing complete
+    fresh-plan executions. Returns ``(sink_sec, honest_sec)`` rounded
+    to ms, then clears the SQL cache so queries that persist()
+    intermediates do not accumulate cached blocks across a session."""
+    materialize(name)
+    runs = [materialize(name) for _ in range(3)]
+    spark.catalog.clearCache()
+    return round(min(r[0] for r in runs), 3), round(min(r[1] for r in runs), 3)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
-    # r15 (r14 verdict task 8): LOAD-GATE the COMMITTED anchor. Two
-    # committed r14 artifacts of identical code differed 25% because
-    # their sessions started at different host load; the committed
-    # detail is only comparable when measured quiet. When writing the
+    # LOAD-GATE the COMMITTED anchor. Two committed artifacts of
+    # identical code once differed 25% because their sessions started
+    # at different host load; the committed detail is only comparable
+    # when measured quiet. When writing the
     # committed artifact (SPARK_GRAFT_BENCH_DETAIL set — `make
     # bench-commit`), refuse to start above load 0.5 unless
     # SPARK_GRAFT_BENCH_FORCE=1. Env-less runs (the driver's, the
@@ -477,8 +491,8 @@ def main() -> None:
         if load_now >= 0.5:
             print(
                 f"bench-commit refused: load_1min={load_now} >= 0.5 — "
-                "the committed anchor must be measured on a quiet host "
-                "(r14 verdict task 8). Wait for the load to fall or set "
+                "the committed anchor must be measured on a quiet host. "
+                "Wait for the load to fall or set "
                 "SPARK_GRAFT_BENCH_FORCE=1.",
                 file=sys.stderr,
             )
@@ -521,26 +535,18 @@ def main() -> None:
         spark.catalog.clearCache()
 
     for name in HEADLINE:
-        # Steady-state protocol (JMH-style): one untimed warm-up run per
-        # query absorbs codegen/JIT/scan-cache effects, then the best of
-        # THREE timed runs is recorded (r8+; rounds 2-7 used best-of-2)
-        # — min-of-N filters scheduler / noisy-neighbor jitter (observed
-        # ±25% run-to-run on this host) while still timing complete
-        # fresh-plan executions. Applied uniformly to every query.
-        materialize(name)
-        runs = [materialize(name) for _ in range(3)]
-        times[name] = round(min(r[0] for r in runs), 3)
-        honest[name] = round(min(r[1] for r in runs), 3)
-        # Queries that persist() intermediates (q239/q246 word-type
-        # histograms) must not accumulate cached blocks across a
-        # many-query session.
-        spark.catalog.clearCache()
+        times[name], honest[name] = steady_time(spark, materialize, name)
 
     total = round(sum(times.values()), 3)
     total_honest = round(sum(honest.values()), 3)
-    # Output protocol (r4 verdict task 3): the driver keeps only a ~2 KB
-    # TAIL of stdout and parses the FINAL line — the 87-query per-query
-    # dict outgrew that window in round 4 (BENCH_r04 parsed: null). So:
+    # The same totals without the one-time `cold_store:` store builds,
+    # which the regular rows price in their untimed warm-up.
+    warm = [k for k in times if not k.startswith("cold_store:")]
+    total_ex_cold = round(sum(times[k] for k in warm), 3)
+    total_honest_ex_cold = round(sum(honest[k] for k in warm), 3)
+    # Output protocol: a consumer that keeps only a ~2 KB TAIL of stdout
+    # parses the FINAL line — an 87-query per-query dict already
+    # outgrew that window (BENCH_r04 parsed: null). So:
     # per-query detail goes to a sidecar file + a non-final stdout line
     # (retrievable locally), and the LAST printed line is a compact
     # summary that always fits the tail window. This also matches the
@@ -554,12 +560,12 @@ def main() -> None:
         "queries": times,
         "queries_honest": honest,
         "sf": sf,
-        # Estimator + noise contract, encoded in the artifact (r7
-        # verdict task 3): each per-query time is min of 3 timed runs
+        # Estimator + noise contract, encoded in the artifact: each
+        # per-query time is min of 3 timed runs
         # after 1 untimed warm-up; this host drifts ±10-25% across
         # identical-code invocations, so compare per-query vs the last
         # committed detail and treat only >1.3x-and-reproducible as
-        # regression. Two per-query fields (r11 verdict task 1):
+        # regression. Two per-query fields:
         # `queries` times only the noop sink of the built plan — the
         # protocol every round since r1 has recorded, and THE field
         # round-over-round regressions are judged on; `queries_honest`
@@ -574,13 +580,13 @@ def main() -> None:
         "(single cold run each, not min-of-3) — subtract them when "
         "comparing totals to rounds <= 14",
         "host_drift": "±10-25% cross-run on identical code; see module docstring",
-        # r12 verdict task 3: record the host's 1-minute load average at
+        # Record the host's 1-minute load average at
         # measurement START so the comparison protocol can tell a
         # drift-elevated session from a regression without a re-run.
         "load_1min": load_at_start,
     }
     # Detail sidecar path: $SPARK_GRAFT_BENCH_DETAIL overrides; the
-    # DEFAULT is the UNCOMMITTED local name (r11 verdict task 3 — an
+    # DEFAULT is the UNCOMMITTED local name (an
     # env-less `python bench.py`, e.g. the driver's per-round run, must
     # leave `git status` clean instead of clobbering the committed
     # round artifact). The builder's round flow writes the committed
@@ -602,6 +608,8 @@ def main() -> None:
                 "metric": "headline_queries_total_time",
                 "value": total,
                 "value_honest": total_honest,
+                "value_ex_cold": total_ex_cold,
+                "value_honest_ex_cold": total_honest_ex_cold,
                 "unit": "sec",
                 "sf": sf,
                 "n_queries": len(times),

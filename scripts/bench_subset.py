@@ -3,9 +3,10 @@
 (warm-up + min-of-3 noop sink, clearCache between queries, load_1min
 recorded) — the A/B instrument for single-family optimization work.
 
-The per-query measurement is IMPORTED from bench.py
-(``make_materializer``) so the two tools cannot drift (r14 ADVICE
-item 4); job labels are reset by the shared helper after every query.
+The per-query measurement and the warm-up + min-of-3 loop are
+IMPORTED from bench.py (``make_materializer``, ``steady_time``) so the
+two tools cannot drift; job labels are reset by the shared helper
+after every query.
 
 Usage: python scripts/bench_subset.py q433_... q459_... [...]
 Prints one JSON line per run: {"queries": {...}, "queries_honest":
@@ -17,11 +18,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time  # noqa: F401  (kept for interactive use in drills)
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import make_materializer  # noqa: E402
+from bench import make_materializer, steady_time  # noqa: E402
 from azure_batch_map_reduce_spark.registry import load_all  # noqa: E402
 from azure_batch_map_reduce_spark.session import get_spark  # noqa: E402
 
@@ -41,11 +41,7 @@ def main() -> int:
     times: dict[str, float] = {}
     honest: dict[str, float] = {}
     for name in names:
-        materialize(name)
-        runs = [materialize(name) for _ in range(3)]
-        times[name] = round(min(r[0] for r in runs), 3)
-        honest[name] = round(min(r[1] for r in runs), 3)
-        spark.catalog.clearCache()
+        times[name], honest[name] = steady_time(spark, materialize, name)
     print(
         json.dumps(
             {

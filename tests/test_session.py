@@ -10,12 +10,20 @@ application.
 from __future__ import annotations
 
 import os
+import re
+import sys
+import threading
+import time
 from pathlib import Path
 
+import pytest
+
 from azure_batch_map_reduce_spark.session import (
+    _SCOPES,
     _STORE,
     autoscale_conf,
     clear_session_store,
+    scoped_shuffle_partitions,
     session_store,
 )
 
@@ -77,3 +85,98 @@ def test_application_id_only_in_session_module():
         if "applicationId" in line
     ]
     assert not hits, f"applicationId outside session.py: {hits}"
+
+
+@pytest.mark.parametrize(
+    "call, owner",
+    [
+        ("_minhash_exprs(", "functions/dedup.py::_minhash_signatures"),
+        ("bpe_merge_symbols(", "functions/text.py::_bpe_train"),
+    ],
+)
+def test_copied_stage_is_built_in_one_place(call, owner):
+    """The MinHash signature stage and the BPE trainer are each built by
+    one function; a query that needs the stage calls that function
+    instead of calling the stage's pieces again. Hits are named by the
+    enclosing top-level function."""
+    callers = set()
+    for path in sorted(PKG.rglob("*.py")):
+        top = None
+        for line in path.read_text().splitlines():
+            m = re.match(r"def (\w+)\(", line)
+            if m:
+                top = m.group(1)
+            if call in line and not line.lstrip().startswith("def "):
+                callers.add(f"{path.relative_to(PKG)}::{top}")
+    assert callers == {owner}
+
+
+def test_scoped_shuffle_partitions_rejects_a_second_thread(spark):
+    """A scope pins a session-global conf, so while one thread holds a
+    scope (here two nested ones) another thread's scope on the same
+    session raises instead of silently sharing the pinned value; once
+    the holder exits, the other thread may open one."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    opened, release = threading.Event(), threading.Event()
+
+    def hold():
+        with scoped_shuffle_partitions(spark, 3):
+            with scoped_shuffle_partitions(spark, 4):
+                opened.set()
+                release.wait(60)
+
+    holder = threading.Thread(target=hold)
+    holder.start()
+    try:
+        assert opened.wait(60)
+        with pytest.raises(RuntimeError, match="scoped_shuffle_partitions"):
+            with scoped_shuffle_partitions(spark, 5):
+                pass
+        assert spark.conf.get(key) == "4"
+    finally:
+        release.set()
+        holder.join(60)
+    assert spark.conf.get(key) == prev
+    with scoped_shuffle_partitions(spark, 5):
+        assert spark.conf.get(key) == "5"
+    assert spark.conf.get(key) == prev
+
+
+def test_scoped_shuffle_partitions_one_owner_under_contention(spark):
+    """Eight threads race to open scopes on one session with a short
+    switch interval: at most one thread is ever inside a scope, and the
+    session conf and the scope registry end as they began."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    lock = threading.Lock()
+    inside, peak, entered = [0], [0], [0]
+
+    def worker():
+        for _ in range(20):
+            try:
+                with scoped_shuffle_partitions(spark, 3):
+                    with lock:
+                        inside[0] += 1
+                        entered[0] += 1
+                        peak[0] = max(peak[0], inside[0])
+                    time.sleep(0.001)
+                    with lock:
+                        inside[0] -= 1
+            except RuntimeError:
+                pass
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert peak[0] == 1 and entered[0] > 0
+    assert spark.conf.get(key) == prev
+    assert not _SCOPES

@@ -656,3 +656,17 @@ def test_scoped_shuffle_partitions_contextmanager(spark):
     with scoped_shuffle_partitions(spark, None):
         assert spark.conf.get("spark.sql.shuffle.partitions") == prev
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def test_available_now_drops_its_memory_table(spark, sf_dir):
+    """run_available_now removes its uniquely named memory-sink table
+    once the result frame is built: three q364 runs in one session
+    leave no ``q_*`` table, and the last run still returns the first
+    run's rows."""
+    from azure_batch_map_reduce_spark.registry import load_all
+
+    fn = load_all()["q364_stream_full_outer_join"].fn
+    runs = [sorted(fn(spark, sf_dir).collect(), key=repr) for _ in range(3)]
+    left = [t.name for t in spark.catalog.listTables() if t.name.startswith("q_")]
+    assert left == []
+    assert runs[0] and runs[-1] == runs[0]
