@@ -32,12 +32,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from azure_batch_map_reduce_spark.catalog import load_tables
+from azure_batch_map_reduce_spark.functions.similarity import _as_double, _cosine
 from azure_batch_map_reduce_spark.operators.ranks import (
     bounded_order,
     distributed_row_number,
     distributed_running_sum,
     half_up_ratio,
     half_up_ratio_signed,
+    hex_int,
     ntile_from_rank,
     rank_small,
     round_nz,
@@ -238,10 +240,7 @@ def q69_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead."""
     docs = load_tables(spark, sf_dir)["documents"]
     w = F.split(F.col("text"), " ")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long") % 100
-    )
+    bucket = hex_int(F.md5(F.col("doc_id").cast("string")), 1, 8) % 100
     gram = lambda i: F.concat_ws(  # noqa: E731
         " ",
         F.element_at(F.col("w"), i),
@@ -328,26 +327,20 @@ def q74_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-means is this step in a loop with re-averaged centroids
     (spark.ml KMeans does exactly that at scale)."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    as_d = lambda c: F.transform(c, lambda x: x.cast("double"))  # noqa: E731
-    dot = lambda u, v: F.aggregate(  # noqa: E731
-        F.zip_with(u, v, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    )
     cent = (
         emb.orderBy("vec_id")
         .limit(8)
-        .select(F.col("vec_id").alias("cid"), as_d("embedding").alias("ce"))
+        .select(
+            F.col("vec_id").alias("cid"), _as_double(F.col("embedding")).alias("ce")
+        )
     )
     scored = (
-        emb.select("vec_id", as_d("embedding").alias("e"))
+        emb.select("vec_id", _as_double(F.col("embedding")).alias("e"))
         .crossJoin(F.broadcast(cent))
         .select(
             "vec_id",
             "cid",
-            F.round(
-                dot(F.col("e"), F.col("ce"))
-                / F.sqrt(dot(F.col("e"), F.col("e")) * dot(F.col("ce"), F.col("ce"))),
-                6,
-            ).alias("cosine"),
+            F.round(_cosine(F.col("e"), F.col("ce")), 6).alias("cosine"),
         )
     )
     best = scored.withColumn(
@@ -389,10 +382,7 @@ def q75_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     one contiguous file set; shard counts stay balanced because the key
     is a hash, not a natural attribute."""
     docs = load_tables(spark, sf_dir)["documents"]
-    shard = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 9, 8), 16, 10)
-        .cast("long") % 16
-    )
+    shard = hex_int(F.md5(F.col("doc_id").cast("string")), 9, 8) % 16
     return docs.groupBy(shard.alias("shard")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(F.split(F.col("text"), " "))).alias("n_tokens"),
@@ -445,7 +435,7 @@ def q76_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact after 6-digit rounding. Map-only + k-label rollup: no large
     shuffle."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    e = _as_double(F.col("embedding"))
     v = emb.select("vec_id", "label", e.alias("e"))
     scaled = v.select(
         "vec_id",
@@ -606,9 +596,7 @@ def q112_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     that makes incremental re-sampling cheap.
     """
     docs = load_tables(spark, sf_dir)["documents"]
-    u = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 17, 8), 16, 10
-    ).cast("double")
+    u = hex_int(F.md5(F.col("doc_id").cast("string")), 17, 8)
     prio = u / F.col("n_chars")
     return (
         docs.where(F.col("n_chars") > 0)
@@ -618,15 +606,7 @@ def q112_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "n_chars",
-            half_up_ratio(
-                F.conv(
-                    F.substring(F.md5(F.col("doc_id").cast("string")), 17, 8),
-                    16,
-                    10,
-                ).cast("long"),
-                F.col("n_chars"),
-                6,
-            ).alias("priority"),
+            half_up_ratio(u, F.col("n_chars"), 6).alias("priority"),
         )
     )
 
@@ -738,7 +718,7 @@ def q123_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = F.md5(F.col("doc_id").cast("string"))
     toks = docs.select(
         "doc_id",
-        (F.conv(F.substring(h, 25, 8), 16, 10).cast("long") % 16).alias("shard"),
+        (hex_int(h, 25, 8) % 16).alias("shard"),
         F.size(F.split(F.col("text"), " ")).alias("n_tok"),
     )
     w = (
@@ -808,8 +788,7 @@ def q129_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.row_number().over(w) == 1).alias("is_canonical"),
         (F.size(F.split(F.col("text"), " ")) >= 30).alias("quality_ok"),
         (
-            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-            .cast("long") % 100 < 90
+            hex_int(F.md5(F.col("doc_id").cast("string")), 1, 8) % 100 < 90
         ).alias("is_train"),
     )
     c, q_, tr = F.col("is_canonical"), F.col("quality_ok"), F.col("is_train")
@@ -967,11 +946,7 @@ def q170_correlated_sample_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
 
     def keep(col):
-        u = F.conv(
-            F.substring(F.md5(F.concat(F.lit("cs|"), col.cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
+        u = hex_int(F.md5(F.concat(F.lit("cs|"), col.cast("string"))), 1, 8)
         return u * 5 < F.lit(4294967296)
 
     orders, lineitem = t["orders"], t["lineitem"]
@@ -1090,16 +1065,9 @@ def q171_lift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(spend, F.col("c_custkey") == F.col("o_custkey"), "left")
         .select(
             "c_custkey",
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("lift|"), F.col("c_custkey").cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
+            hex_int(
+                F.md5(F.concat(F.lit("lift|"), F.col("c_custkey").cast("string"))), 1, 8
             )
-            .cast("long")
             .alias("score"),
             F.when(F.coalesce("cents", F.lit(0)) > 325000000, 1)
             .otherwise(0)
@@ -1147,6 +1115,13 @@ def q171_lift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _source_fold() -> Column:
+    """Group k-fold assignment of a source, ``md5('fold|' || source)``
+    read as a BIGINT mod 5 (q195, q244)."""
+    fold = hex_int(F.md5(F.concat(F.lit("fold|"), F.col("source"))), 1, 8) % 5
+    return fold.cast("int")
+
+
 @query(
     "q195_group_aware_split",
     oracle="""
@@ -1185,11 +1160,7 @@ def q195_group_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     one partial+final aggregation. The leakage audit aggregates at
     source grain (tiny) and broadcasts a single number."""
     docs = load_tables(spark, sf_dir)["documents"]
-    fold = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("fold|"), F.col("source"))), 1, 8), 16, 10)
-        .cast("long") % 5
-    ).cast("int")
-    folded = docs.select("source", "doc_id", "n_chars", fold.alias("fold"))
+    folded = docs.select("source", "doc_id", "n_chars", _source_fold().alias("fold"))
     leaky = (
         folded.groupBy("source")
         .agg(F.countDistinct("fold").alias("nf"))
@@ -1451,14 +1422,10 @@ def q244_group_kfold_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-data writer would `partitionBy` — fold-pruned reads at
     evaluation time."""
     docs = load_tables(spark, sf_dir)["documents"]
-    fold = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("fold|"), F.col("source"))), 1, 8), 16, 10)
-        .cast("long") % 5
-    ).cast("int")
     folded = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.length("text")).alias("n_chars"),
-    ).withColumn("fold", fold)
+    ).withColumn("fold", _source_fold())
     tot = folded.agg(
         F.sum("n_docs").cast("double").alias("total"),
         F.count(F.lit(1)).alias("n_sources_all"),
@@ -2370,9 +2337,7 @@ def q265_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(f"|{k}"),
             )
         )
-        return F.when(
-            F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % 4 == 0, 1
-        ).otherwise(0)
+        return F.when(hex_int(h, 1, 8) % 4 == 0, 1).otherwise(0)
 
     weighted = docs.select(
         "doc_id",
@@ -2484,10 +2449,6 @@ def q266_class_balanced_undersample(spark: SparkSession, sf_dir: str) -> DataFra
     min rank + 1 (a |types|-row broadcast). The oracle states the
     same thing as a plain partitioned window, which is correct at
     oracle grain."""
-    from azure_batch_map_reduce_spark.operators.ranks import (
-        distributed_row_number,
-    )
-
     ev = load_tables(spark, sf_dir)["events"]
     sized = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     m = sized.agg(F.min("n").alias("m"))
@@ -2733,22 +2694,18 @@ def q288_span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = docs.select(
         "doc_id", F.split(F.lower(F.col("text")), " ").alias("ws")
     )
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("mask|"),
-                    F.col("doc_id").cast("string"),
-                    F.lit("|"),
-                    F.col("i").cast("string"),
-                )
-            ),
-            1,
-            8,
+    h = hex_int(
+        F.md5(
+            F.concat(
+                F.lit("mask|"),
+                F.col("doc_id").cast("string"),
+                F.lit("|"),
+                F.col("i").cast("string"),
+            )
         ),
-        16,
-        10,
-    ).cast("long")
+        1,
+        8,
+    )
     starts = (
         w.select(
             "doc_id",
@@ -2841,15 +2798,9 @@ def q289_fim_split_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.col("n") >= 2)
 
     def cut(salt: str):
-        return 1 + F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long") % (F.col("n") - 1)
+        return 1 + hex_int(
+            F.md5(F.concat(F.lit(salt), F.col("doc_id").cast("string"))), 1, 8
+        ) % (F.col("n") - 1)
 
     cuts = w.select("doc_id", "n", cut("fim1|").alias("c1"), cut("fim2|").alias("c2"))
     lo = F.least("c1", "c2")
@@ -3376,11 +3327,7 @@ def q313_shard_entropy_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     emission = map slot (``App.config:16``); entropy consolidation =
     reduce slot (``App.config:17``)."""
     docs = load_tables(spark, sf_dir)["documents"]
-    shard = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 9, 8), 16, 10)
-        .cast("long")
-        % _SHARD_N
-    )
+    shard = hex_int(F.md5(F.col("doc_id").cast("string")), 9, 8) % _SHARD_N
     toks = docs.select(
         shard.alias("shard"),
         F.explode(F.split(F.lower(F.col("text")), " ")).alias("w"),
@@ -3428,7 +3375,6 @@ def q313_shard_entropy_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(entropy_fold(F.col("w")).alias("corpus_ent"))
     )
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
 
     return (
         sh_ent.crossJoin(F.broadcast(corpus))
@@ -3442,6 +3388,16 @@ def q313_shard_entropy_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .orderBy("shard")
+    )
+
+
+def _exp_arm() -> Column:
+    """A/B arm of a user, ``md5('exp|' || user_id)`` read as a BIGINT
+    mod 2: the one assignment q318, q320, q334, q336, q344 and q347
+    share."""
+    return (
+        hex_int(F.md5(F.concat(F.lit("exp|"), F.col("user_id").cast("string"))), 1, 8)
+        % 2
     )
 
 
@@ -3524,18 +3480,7 @@ def q318_cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFrame
             (F.unix_micros(F.min("ts")) + F.unix_micros(F.max("ts"))) / 2
         ).cast("long").alias("mid_us")
     )
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("exp|"), F.col("user_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    arm = _exp_arm()
     um = (
         events.crossJoin(F.broadcast(marks))
         .groupBy("user_id", arm.alias("arm"))
@@ -3718,26 +3663,13 @@ def q320_difference_in_differences(spark: SparkSession, sf_dir: str) -> DataFram
     Reference contract: per-event cell bucketing = map slot
     (``App.config:16``); cell + estimate consolidation = reduce slot
     (``App.config:17``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
-
     events = load_tables(spark, sf_dir)["events"]
     marks = events.agg(
         ((F.unix_micros(F.min("ts")) + F.unix_micros(F.max("ts"))) / 2)
         .cast("long")
         .alias("mid_us")
     )
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("exp|"), F.col("user_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    arm = _exp_arm()
     cells = (
         events.crossJoin(F.broadcast(marks))
         .groupBy(
@@ -4221,15 +4153,9 @@ def q324_mcnemar_paired_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir)["embeddings"]
 
     def channel(tag: str, mod: int) -> Column:
-        h = F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(tag + "|"), F.col("vec_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        h = hex_int(
+            F.md5(F.concat(F.lit(tag + "|"), F.col("vec_id").cast("string"))), 1, 8
+        )
         return F.when(h % mod == 0, 1).otherwise(0)
 
     truth = (F.col("label") % 2).alias("truth")
@@ -4388,17 +4314,9 @@ def q333_conformal_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("long").alias("cents"),
         "event_id",
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(F.lit("cp|"), F.col("event_id").cast("string"))
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
+            hex_int(
+                F.md5(F.concat(F.lit("cp|"), F.col("event_id").cast("string"))), 1, 8
+            )
             % 3
         ).alias("split"),
     ).persist()
@@ -4548,20 +4466,7 @@ def q334_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFram
     (``App.config:17``)."""
     events = load_tables(spark, sf_dir)["events"]
     base = events.select(
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(F.lit("exp|"), F.col("user_id").cast("string"))
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 2
-        ).alias("arm"),
+        _exp_arm().alias("arm"),
         F.round(F.col("value") * 100).cast("long").alias("cents"),
         "event_id",
     )
@@ -4691,20 +4596,7 @@ def q336_uplift_qini_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``App.config:17``)."""
     events = load_tables(spark, sf_dir)["events"]
     units = events.select(
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(F.lit("exp|"), F.col("user_id").cast("string"))
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 2
-        ).alias("arm"),
+        _exp_arm().alias("arm"),
         F.when(F.col("event_type") == "purchase", 1)
         .otherwise(0)
         .alias("responded"),
@@ -4836,22 +4728,18 @@ def q338_epoch_shuffle_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("shuffle|"),
-                            F.col("epoch").cast("string"),
-                            F.lit("|"),
-                            F.col("doc_id").cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
+            hex_int(
+                F.md5(
+                    F.concat(
+                        F.lit("shuffle|"),
+                        F.col("epoch").cast("string"),
+                        F.lit("|"),
+                        F.col("doc_id").cast("string"),
+                    )
                 ),
-                16,
-                10,
-            ).cast("long")
+                1,
+                8,
+            )
             % _EPOCH_SHARDS
         ).alias("shard"),
     )
@@ -5048,18 +4936,7 @@ def q344_welch_t_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     test evaluation = reduce slot (``App.config:17``)."""
     events = load_tables(spark, sf_dir)["events"]
     cents = F.round(F.col("value") * 100).cast("long")
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("exp|"), F.col("user_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    arm = _exp_arm()
     cells = events.groupBy("event_type", arm.alias("arm")).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(cents).alias("s"),
@@ -5281,20 +5158,7 @@ def q347_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_tables(spark, sf_dir)["events"]
     units = events.select(
         "user_id",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(F.lit("exp|"), F.col("user_id").cast("string"))
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 2
-        ).alias("arm"),
+        _exp_arm().alias("arm"),
     ).distinct()
     counts = units.agg(
         F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n0"),
@@ -5728,10 +5592,7 @@ def q356_dsir_importance_resampling(spark: SparkSession, sf_dir: str) -> DataFra
     ).select(
         "doc_id",
         "source",
-        (
-            F.conv(F.substring(F.md5("tok"), 1, 12), 16, 10).cast("long")
-            % _DSIR_BUCKETS
-        ).alias("b"),
+        (hex_int(F.md5("tok"), 1, 12) % _DSIR_BUCKETS).alias("b"),
     )
     raw = bt.groupBy("b").agg(F.count(F.lit(1)).alias("c_r"))
     tgt = (
@@ -6461,22 +6322,18 @@ def q375_fleiss_kappa_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(r,) for r in range(1, _FK_RATERS + 1)], "rater int"
     )
     flip = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("rater"),
-                        F.col("rater").cast("string"),
-                        F.lit("|"),
-                        F.col("vec_id").cast("string"),
-                    )
-                ),
-                1,
-                12,
+        hex_int(
+            F.md5(
+                F.concat(
+                    F.lit("rater"),
+                    F.col("rater").cast("string"),
+                    F.lit("|"),
+                    F.col("vec_id").cast("string"),
+                )
             ),
-            16,
-            10,
-        ).cast("long")
+            1,
+            12,
+        )
         % _FK_NOISE_MOD
         == 0
     )
@@ -6822,15 +6679,7 @@ def q383_propensity_score_matching(spark: SparkSession, sf_dir: str) -> DataFram
         1 / (1 + F.exp(-((F.col("n_chars") - 500) / F.lit(200.0)))), 6
     )
     treated_flag = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("psm|"), F.col("doc_id").cast("string"))),
-                1,
-                12,
-            ),
-            16,
-            10,
-        ).cast("long")
+        hex_int(F.md5(F.concat(F.lit("psm|"), F.col("doc_id").cast("string"))), 1, 12)
         % 5
         == 0
     )
@@ -7070,7 +6919,7 @@ def q407_dp_noisy_count_release(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def laplace(salt: str) -> Column:
         h = F.md5(F.concat(F.lit(salt), F.col("c_nationkey").cast("string")))
-        x = F.conv(F.substring(h, 1, 8), 16, 10).cast("long").cast("double")
+        x = hex_int(h, 1, 8).cast("double")
         u = (x + F.lit(0.5)) / F.lit(4294967296.0)
         v = u - F.lit(0.5)
         return (
@@ -7315,11 +7164,6 @@ def q418_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference contract: per-doc assignment = map slot
     (``App.config:16``); per-resample consolidation = reduce slot
     (``App.config:17``, ``Program.cs:351-384``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import (
-        half_up_ratio,
-        round_nz,
-    )
-
     docs = load_tables(spark, sf_dir)["documents"]
     pool = docs.where(F.col("source").isin("src0", "src1")).select(
         "doc_id", "source", F.col("n_chars").cast("long").alias("v")
@@ -7336,22 +7180,18 @@ def q418_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("t_obs"),
     )
     bit = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.lit("q418"),
-                        F.col("k").cast("string"),
-                        F.col("doc_id").cast("string"),
-                    )
-                ),
-                1,
-                8,
+        hex_int(
+            F.md5(
+                F.concat_ws(
+                    ":",
+                    F.lit("q418"),
+                    F.col("k").cast("string"),
+                    F.col("doc_id").cast("string"),
+                )
             ),
-            16,
-            10,
-        ).cast("long")
+            1,
+            8,
+        )
         % 2
     )
     assigned = pool.select(
@@ -7767,8 +7607,6 @@ def q431_randomized_response_frequency(
     Reference contract: per-record perturbation = map slot
     (``App.config:16``); debiased rollup = reduce slot
     (``App.config:17``, ``Program.cs:351-384``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import rank_small
-
     docs = load_tables(spark, sf_dir)["documents"].select("doc_id", "lang")
     langs = rank_small(
         docs.select("lang").distinct(),
@@ -7776,16 +7614,8 @@ def q431_randomized_response_frequency(
         ["lang"],
     )
     nl = langs.agg(F.count(F.lit(1)).alias("L"))
-    h = lambda salt: (  # noqa: E731
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+    h = lambda salt: hex_int(  # noqa: E731
+        F.md5(F.concat(F.lit(salt), F.col("doc_id").cast("string"))), 1, 8
     )
     thresh = _RR_WINDOW * _RR_P_NUM // _RR_P_DEN
     drawn = docs.crossJoin(F.broadcast(nl)).select(
@@ -7881,8 +7711,8 @@ def _qc_steps_sql(
     training release, q437's cartography, and q441's cross-validation
     — ONE definition of the weight path, so the oracles cannot drift
     apart). ``subset`` trains step k on the deterministic half-corpus
-    ``doc_id % 2 = k % 2`` (q437's variability driver, r11 verdict
-    task 5 — obs must then carry doc_id); ``filt`` applies one
+    ``doc_id % 2 = k % 2`` (q437's variability driver — obs must
+    then carry doc_id); ``filt`` applies one
     CONSTANT SQL predicate to every step's scan (q441's train-fold
     restriction, e.g. `` WHERE doc_id % 3 <> 0``); ``prefix`` renames
     the CTE chain ({{prefix}}g1/{{prefix}}w1…) so several independent
@@ -8364,8 +8194,6 @@ def q433_quality_classifier_training(
     feature+gradient map fuses into the scan. Reference contract:
     per-example gradient = map slot (``App.config:16``); model update
     = reduce slot (``App.config:17``, ``Program.cs:351-384``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
-
     obs = _qc_obs_shared(spark, sf_dir)
     # Session-shared default path (r15): the 3 training scans run once
     # per application across the six default-path consumers.
@@ -8502,7 +8330,7 @@ def q437_dataset_cartography(spark: SparkSession, sf_dir: str) -> DataFrame:
     triage a curation pipeline uses to find mislabeled (hard) and
     most-informative (ambiguous) slices.
 
-    Both axes are EXERCISED (r11 verdict task 5): the weight path is
+    Both axes are EXERCISED: the weight path is
     the shared trainer run for 6 steps with step k trained on the
     deterministic half-corpus ``doc_id % 2 = k % 2`` (the
     subset-varied mode of ``_qc_steps_sql`` / ``_qc_train`` — still
@@ -8661,8 +8489,8 @@ def q438_discrete_geometric_release(
     noise a TRUNCATED two-sided geometric, so the ε = ln 2 accounting
     below is for the untruncated ideal mechanism; the truncation
     deviates with probability 2⁻³² per draw, which a production
-    deployment absorbs as a δ-style slack (r11 ADVICE item 3 — no
-    code change, the accounting caveat just lives here explicitly).
+    deployment absorbs as a δ-style slack (the code is unaffected;
+    the accounting caveat lives here explicitly).
     Like q407/q431 this verifies
     the MECHANISM'S MATH only: deterministic salted draws and the
     co-released true counts void the privacy guarantee a production
@@ -8682,13 +8510,7 @@ def q438_discrete_geometric_release(
     g = events.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
 
     def geo(salt: str) -> Column:
-        u = F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt), F.col("event_type"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
+        u = hex_int(F.md5(F.concat(F.lit(salt), F.col("event_type"))), 1, 8)
         return F.lit(32) - F.length(F.bin(u))
 
     noise = (geo("dg1|") - geo("dg2|")).cast("long")
@@ -8995,7 +8817,7 @@ def q439_dpsgd_private_training(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """DP-SGD-style clipped-gradient training — the composition the
-    privacy and training families were missing (r11 verdict task 4):
+    privacy and training families were missing:
     q433 trains on RAW per-example gradients; q407/q438 noise COUNTS;
     private ML ships per-example gradient CLIPPING (bounding each
     example's influence = the sensitivity bound) + integer noise on
@@ -9043,8 +8865,6 @@ def q439_dpsgd_private_training(
     clipped gradient = map slot (``App.config:16``); noisy
     aggregation + update = reduce slot (``App.config:17``,
     ``Program.cs:351-384``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
-
     obs = _qc_obs_shared(spark, sf_dir).persist()
     w = [0.0] * 4
     accs: list = []
@@ -9545,8 +9365,6 @@ def q448_tracin_gradient_influence(
     Reference contract: per-example gradient = map slot
     (``App.config:16``); probe aggregation + influence ranking =
     reduce slots (``App.config:17``, ``Program.cs:351-384``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import bounded_order
-
     obs = _qc_obs_shared(spark, sf_dir, with_id=True)
     train = obs.where(F.col("doc_id") % _TI_PROBE_MOD != 0)
     path, _, _ = _qc_train(train.select("xa", "y"))
@@ -9995,8 +9813,8 @@ def q451_gradient_noise_scale(
     sf0.1 exceeds int64 — the q390 widening rule); both released
     ratios go through the half-up idiom (quotients bounded: the
     noise scale is ≤ ~10⁶ at fixture gradients, within the int64
-    quotient limit). Two near-convergence edges are explicit (r12
-    ADVICE item 3): a literally zero summed gradient (g2_q = 0)
+    quotient limit). Two near-convergence edges are explicit: a
+    literally zero summed gradient (g2_q = 0)
     releases NULL on both engines instead of a div-by-zero error /
     engine-split null, and the half-up idiom's int64 quotient limit
     means a noise scale beyond ~9.2e18/10⁶ ≈ 9.2e12 would wrap
@@ -10065,7 +9883,7 @@ def q451_gradient_noise_scale(
             g2sum.alias("g2_q"),
         ).select(
             F.lit(k).cast("long").alias("step"),
-            # Zero-gradient guard (r12 ADVICE item 3): if every summed
+            # Zero-gradient guard: if every summed
             # per-dim gradient is exactly zero, DuckDB's integer // by
             # zero errors and Spark's div yields null — release NULL
             # explicitly on BOTH engines instead. Unreachable at
@@ -10246,9 +10064,7 @@ def q455_exponential_mechanism_dp_median(
     )
     cum = wts.withColumn("cw", F.sum("w").over(w_cum))
     tot = wts.agg(F.sum("w").alias("tw"))
-    rho = F.conv(
-        F.substring(F.md5(F.lit("q455|dp-median")), 1, 15), 16, 10
-    ).cast("long")
+    rho = hex_int(F.md5(F.lit("q455|dp-median")), 1, 15)
     thr = tot.select(
         F.call_function(
             "div",
@@ -10451,7 +10267,6 @@ def q459_momentum_training(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     fin = _qc_multi_step(obs, [{"name": 0, "w": w}], with_grads=False)[0]
     fin = {"n_correct": fin["nc"], "n": fin["n"]}
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
 
     acc_rows = [
         ("acc", k + 1, int(nc), int(n)) for k, (nc, n) in enumerate(accs)
@@ -10588,13 +10403,7 @@ def q461_license_propagation_packing(
     lic = F.element_at(
         F.array(*[F.lit(x) for x in _LIC_NAMES]),
         (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("lic|"), F.col("source"))), 1, 8
-                ),
-                16,
-                10,
-            ).cast("long")
+            hex_int(F.md5(F.concat(F.lit("lic|"), F.col("source"))), 1, 8)
             % 3
             + 1
         ).cast("int"),
@@ -11262,8 +11071,6 @@ def q473_federated_averaging_round(
     driver. Reference contract: shard training = map slots
     (``App.config:16``); the weighted average + global eval = reduce
     slot (``App.config:17``, ``Program.cs:351-384``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
-
     obs = _qc_obs_shared(spark, sf_dir, with_id=True)
     # Fused shard training (r15, guide §2.4): the shards are DISJOINT
     # doc_id slices training INDEPENDENT models, so each local step's
@@ -11426,8 +11233,6 @@ def q474_polyak_tail_averaging(
     Reference contract: per-example gradient = map slot
     (``App.config:16``); iterate average + eval = reduce slot
     (``App.config:17``, ``Program.cs:351-384``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
-
     obs = _qc_obs_shared(spark, sf_dir)
     # Session-shared default path, extended to 4 steps (r15): steps
     # 1-3 come from the cache when a sibling already trained them;
@@ -11551,8 +11356,6 @@ def q475_lr_schedule_training(
     metadata. Reference contract: per-example gradient = map slot
     (``App.config:16``); scheduled update = reduce slot
     (``App.config:17``, ``Program.cs:351-384``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
-
     obs = _qc_obs_shared(spark, sf_dir)
     k = len(_LRS_SCHED)
     path, accs, _n = _qc_train(obs, n_steps=k, lrs=_LRS_SCHED)
@@ -11697,8 +11500,6 @@ def q476_gradient_accumulation_audit(
     contract: per-example gradient = map slot (``App.config:16``);
     accumulation = reduce slot (``App.config:17``,
     ``Program.cs:351-384``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
-
     obs = _qc_obs_shared(spark, sf_dir, with_id=True)
     qs = _QC_QSCALE
 
@@ -11879,8 +11680,6 @@ def q477_knowledge_distillation(
     contract: per-example gradients = map slot (``App.config:16``);
     model updates + eval = reduce slots (``App.config:17``,
     ``Program.cs:351-384``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
-
     obs = _qc_obs_shared(spark, sf_dir).persist()
     # The teacher IS the shared default path (r15) — same steps, same
     # arithmetic; the student loop below stays query-specific.
@@ -12079,8 +11878,6 @@ def q478_dpo_preference_step(
     shape on pair grain. Reference contract: per-pair gradient = map
     slot (``App.config:16``); update + ranking eval = reduce slots
     (``App.config:17``, ``Program.cs:351-384``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
-
     obs = _qc_obs_shared(spark, sf_dir, with_id=True)
     a = obs.select(
         F.col("doc_id").alias("id_a"),
@@ -12268,10 +12065,6 @@ def q479_moe_routing_capacity_audit(
     dispatch plan's cost model. Reference contract: token routing =
     map slot (``App.config:16``); per-expert rollup = reduce slot
     (``App.config:17``, ``Program.cs:351-384``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import (
-        half_up_ratio,
-    )
-
     docs = load_tables(spark, sf_dir)["documents"]
     e = _MOE_E
     toks = (
@@ -12280,11 +12073,7 @@ def q479_moe_routing_capacity_audit(
         )
         .where(F.col("w") != "")
         .select(
-            (
-                F.conv(F.substring(F.md5(F.col("w")), 1, 8), 16, 10)
-                .cast("long")
-                % e
-            ).alias("expert")
+            (hex_int(F.md5(F.col("w")), 1, 8) % e).alias("expert")
         )
     )
     loads = toks.groupBy("expert").agg(

@@ -29,7 +29,12 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 from azure_batch_map_reduce_spark.catalog import load_tables
-from azure_batch_map_reduce_spark.operators.ranks import half_up_ratio, round_nz
+from azure_batch_map_reduce_spark.functions.similarity import _as_double, _dot
+from azure_batch_map_reduce_spark.operators.ranks import (
+    half_up_ratio,
+    hex_int,
+    round_nz,
+)
 from azure_batch_map_reduce_spark.registry import query
 
 # 16 fixed affine permutations for MinHash: (a, b) applied as
@@ -143,7 +148,7 @@ _HASH_SQL = "(('0x' || substr(md5({expr}), 1, 12))::BIGINT % 2147483647)"
 
 
 def _hash48(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("long") % MINHASH_P
+    return hex_int(F.md5(col), 1, 12) % MINHASH_P
 
 
 # Word-trigram shingle sets: the right granularity for near-dup detection
@@ -259,18 +264,22 @@ def _minhash_signatures(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     its trigram set ``sh``.
 
     ``w`` comes back persisted: every caller joins it on both sides of
-    a pair. ``mh`` comes back unpersisted; a caller that branches on it
-    persists it. Deliberately TWO aggregations, not one fused: mixing
+    a pair, and ``mh`` is computed from its cached sets (q396 and q399
+    unpersist it only after their eager checkpoint). ``mh`` comes back
+    unpersisted; a caller that branches on it persists it. Deliberately TWO aggregations, not one fused: mixing
     the 16 codegen'd min() columns with collect_set in a single agg
     forces the whole aggregate onto the ObjectHashAggregate path
     (measured ~2× slower cold than the two split aggs, which each use
     their best implementation)."""
-    tri = _trigram_rows(docs)
-    # MinHash over duplicate shingles ≡ over the distinct set (min is
-    # idempotent) — no dedup pass needed before hashing.
-    ids = tri.select("doc_id", _hash48(F.col("s")).alias("wid"))
+    w = _trigram_rows(docs).groupBy("doc_id").agg(F.collect_set("s").alias("sh"))
+    w = w.persist()
+    # MinHash over the distinct set ≡ over the duplicate shingles (min is
+    # idempotent), so the minhashes read the persisted sets instead of
+    # rebuilding the trigram rows.
+    ids = w.select("doc_id", F.explode("sh").alias("s")).select(
+        "doc_id", _hash48(F.col("s")).alias("wid")
+    )
     mh = ids.groupBy("doc_id").agg(*_minhash_exprs(F.col("wid")))
-    w = tri.groupBy("doc_id").agg(F.collect_set("s").alias("sh")).persist()
     return mh, w
 
 
@@ -483,13 +492,9 @@ def q65_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the transform lambda and re-evaluate per element; a scalar
     column survives collapse evaluated once.)"""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    dot = lambda u, v: F.aggregate(  # noqa: E731
-        F.zip_with(u, v, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    e_dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    n = emb.select("vec_id", "label", e_dbl.alias("e")).withColumn(
-        "nrm", F.sqrt(dot(F.col("e"), F.col("e")))
-    )
+    n = emb.select(
+        "vec_id", "label", _as_double(F.col("embedding")).alias("e")
+    ).withColumn("nrm", F.sqrt(_dot(F.col("e"), F.col("e"))))
     a = n.select(
         F.col("label"), F.col("vec_id").alias("vec_a"),
         F.col("e").alias("ea"), F.col("nrm").alias("na"),
@@ -505,7 +510,7 @@ def q65_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_a",
         "vec_b",
         F.round(
-            dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 6
+            _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 6
         ).alias("cosine"),
     )
     return pairs.filter(F.col("cosine") >= 0.3)
@@ -1405,14 +1410,11 @@ def q258_semantic_cluster_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster key comes from k-means/IVF assignment (q243/q73) instead
     of a stored label — same dataflow."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    dot = lambda u, v: F.aggregate(  # noqa: E731
-        F.zip_with(u, v, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
     n = emb.select(
         "vec_id",
         "label",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("e"),
-    ).withColumn("nrm", F.sqrt(dot(F.col("e"), F.col("e"))))
+        _as_double(F.col("embedding")).alias("e"),
+    ).withColumn("nrm", F.sqrt(_dot(F.col("e"), F.col("e"))))
     a = n.select(
         "label",
         F.col("vec_id").alias("va"),
@@ -1428,7 +1430,7 @@ def q258_semantic_cluster_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = a.join(
         b, (F.col("label") == F.col("label_b")) & (F.col("va") < F.col("vb"))
     ).where(
-        F.round(dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 6)
+        F.round(_dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 6)
         >= 0.3
     )
     comp = connected_components(
@@ -1597,16 +1599,7 @@ def q260_substring_shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFram
         .select(
             "doc_id",
             # 48-bit hash key (see oracle note): narrower shuffle, same plan
-            F.conv(
-                F.substring(
-                    F.md5(F.substring(F.col("t"), F.col("p"), _SHINGLE_K)),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            )
-            .cast("long")
+            hex_int(F.md5(F.substring(F.col("t"), F.col("p"), _SHINGLE_K)), 1, 12)
             .alias("s"),
         )
         .distinct()
@@ -2453,15 +2446,9 @@ def q371_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     prs = neardup_pairs(docs).select("doc_a", "doc_b")
     part = (
         F.when(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("split|"), F.col("doc_id").cast("string"))),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("long")
+            hex_int(
+                F.md5(F.concat(F.lit("split|"), F.col("doc_id").cast("string"))), 1, 12
+            )
             % _LEAK_TEST_MOD
             == 0,
             "test",
@@ -3306,7 +3293,7 @@ def q420_unicode_normalized_neardup(
 ) -> DataFrame:
     """Unicode-normalization on-ramp for the fuzzy-matching family —
     the operator that widens q412's verified domain past its ASCII
-    pin (r9 verdict task 2). The corpus is deterministically
+    pin. The corpus is deterministically
     decorated with non-ASCII text in two CANONICALLY-EQUIVALENT but
     byte-different encodings — even doc_ids get precomposed accents
     (a -> U+00E1, e -> U+00E9), odd doc_ids get the decomposed forms
@@ -3469,7 +3456,7 @@ def q420_unicode_normalized_neardup(
 def q421_dedup_corpus_materialization(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The dedup family's ACTUAL SINK (r9 verdict task 5): q62 finds
+    """The dedup family's ACTUAL SINK: q62 finds
     near-dup pairs, q66 clusters them, q415 emits the keep/drop plan —
     this EXECUTES the plan. The drop list (q415's ``keep = false``
     rows) anti-joins against ``documents`` and the surviving corpus is
@@ -3950,14 +3937,7 @@ def q445_exact_substring_dup_coverage(
         .select(
             "doc_id",
             "source",
-            F.conv(
-                F.substring(
-                    F.md5(F.expr(f"substring(text, i, {_ESD_K})")), 1, 15
-                ),
-                16,
-                10,
-            )
-            .cast("long")
+            hex_int(F.md5(F.expr(f"substring(text, i, {_ESD_K})")), 1, 15)
             .alias("gh"),
         )
         .persist()

@@ -293,9 +293,8 @@ def q147_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow batches, and the payload column is dropped before the frame
     rows fan out so the shuffle never carries bytes.
 
-    FULL DuckDB oracle since round 10 (r9 verdict task 6 — formerly
-    rows-only): ``read_blob``'s (filename, size) lets the oracle
-    rebuild duration (size vs the engine's payload-length — a
+    FULL DuckDB oracle (formerly rows-only): ``read_blob``'s
+    (filename, size) lets the oracle rebuild duration (size vs the engine's payload-length — a
     length-conservation check on binaryFile content), the frame grid
     (integer ``(i·duration) // 6``, which the engine's
     double-divide-then-truncate provably equals for these magnitudes),
@@ -303,7 +302,7 @@ def q147_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold), and the per-asset rollup. The released mean brightness is
     the exact integer ratio sum(u32)/(n·0xFFFFFFFF) through
     ``half_up_ratio`` — avg-of-doubles would hang bit-identity on both
-    engines summing six doubles in the same order (r10 ADVICE 3). The stub seed moved off the
+    engines summing six doubles in the same order. The stub seed moved off the
     payload digest to make this expressible — q164's rule; q92 keeps
     the content-digest path and stays rows-only. The in-result
     invariants remain: ``grid_ok`` (exactly TARGET_FRAMES frames,
@@ -364,7 +363,7 @@ def q147_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
                     # RELEASED per-asset mean is the exact integer ratio
                     # sum(u32) / (n·0xFFFFFFFF) via half_up_ratio — the
                     # avg-of-doubles form depended on both engines
-                    # summing in the same order (r10 ADVICE item 3).
+                    # summing in the same order.
                     "bright_u32": [int(m[:8], 16) for m in mix],
                 }
             )
@@ -498,8 +497,8 @@ def q164_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-process per asset). Emits per asset: frame count, voiced
     count, segment count, longest segment, and voiced ratio.
 
-    FULL DuckDB oracle since round 10 (r9 verdict task 6 — formerly
-    rows-only): ``read_blob('__SF_DIR__/*.parquet')`` exposes
+    FULL DuckDB oracle (formerly rows-only):
+    ``read_blob('__SF_DIR__/*.parquet')`` exposes
     (filename, size), from which the oracle independently rebuilds
     the frame grid (``ceil(size/4096)`` vs the engine's framing of
     the ACTUAL payload bytes — a genuine length-conservation check on

@@ -388,13 +388,9 @@ def q205_arrow_batch_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Float32 values are widened to float64 BEFORE the dot product on
     both engines, so the only cross-engine noise is summation order —
     absorbed by round(6)."""
-    from collections.abc import Iterator
-
     import pyarrow as pa
 
     def norms(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
         for batch in batches:
             ids = batch.column("vec_id")
             emb = batch.column("embedding")

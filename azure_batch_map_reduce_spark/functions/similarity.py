@@ -34,6 +34,32 @@ def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
+def _cosine(u: Column, v: Column) -> Column:
+    """Unrounded cosine, the oracle's ``list_dot_product(u, v) /
+    sqrt(list_dot_product(u, u) * list_dot_product(v, v))``."""
+    return _dot(u, v) / F.sqrt(_dot(u, u) * _dot(v, v))
+
+
+def _sign6() -> Column:
+    """6-bit sign-LSH signature of ``embedding``: one '1'/'0' per sign
+    of its first six coordinates."""
+    return F.concat_ws(
+        "",
+        *[
+            F.when(F.element_at("embedding", i) >= 0, "1").otherwise("0")
+            for i in range(1, 7)
+        ],
+    )
+
+
+def _sign_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(vec_id, label, e, sig)``: each embedding as doubles with its
+    :func:`_sign6` bucket, the frame the sign-LSH queries join on."""
+    emb = load_tables(spark, sf_dir)["embeddings"]
+    e = _as_double(F.col("embedding")).alias("e")
+    return emb.select("vec_id", "label", e, _sign6().alias("sig"))
+
+
 @query(
     "q70_cosine_topk",
     oracle="""
@@ -72,11 +98,7 @@ def q70_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = e.crossJoin(F.broadcast(q)).select(
         "vec_id",
         "label",
-        F.round(
-            _dot(F.col("e"), F.col("qe"))
-            / F.sqrt(_dot(F.col("e"), F.col("e")) * _dot(F.col("qe"), F.col("qe"))),
-            6,
-        ).alias("cosine"),
+        F.round(_cosine(F.col("e"), F.col("qe")), 6).alias("cosine"),
     )
     return scored.orderBy(F.col("cosine").desc(), F.col("vec_id").asc()).limit(10)
 
@@ -116,17 +138,7 @@ def q71_lsh_bucketed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     axis-aligned planes) buckets the corpus; candidate pairs form only
     inside buckets; top-5 per bucket by cosine. The equi-join on `sig`
     replaces the all-pairs cross product — this is the 100 TB path."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    sig = F.concat_ws(
-        "",
-        *[
-            F.when(F.element_at("embedding", i) >= 0, "1").otherwise("0")
-            for i in range(1, 7)
-        ],
-    )
-    n = emb.select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("e"), sig.alias("sig")
-    )
+    n = _sign_buckets(spark, sf_dir)
     a = n.select("sig", F.col("vec_id").alias("vec_a"), F.col("e").alias("ea"))
     b = n.select(
         F.col("sig").alias("sig_b"), F.col("vec_id").alias("vec_b"), F.col("e").alias("eb")
@@ -137,13 +149,8 @@ def q71_lsh_bucketed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sig",
         "vec_a",
         "vec_b",
-        F.round(
-            _dot(F.col("ea"), F.col("eb"))
-            / F.sqrt(_dot(F.col("ea"), F.col("ea")) * _dot(F.col("eb"), F.col("eb"))),
-            6,
-        ).alias("cosine"),
+        F.round(_cosine(F.col("ea"), F.col("eb")), 6).alias("cosine"),
     )
-    from pyspark.sql import Window
 
     w = Window.partitionBy("sig").orderBy(
         F.col("cosine").desc(), F.col("vec_a").asc(), F.col("vec_b").asc()
@@ -198,16 +205,7 @@ def q72_label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame
         ).alias("centroid")
     )
     joined = n.join(F.broadcast(centroids), "label")
-    cos = F.round(
-        F.avg(
-            _dot(F.col("e"), F.col("centroid"))
-            / F.sqrt(
-                _dot(F.col("e"), F.col("e"))
-                * _dot(F.col("centroid"), F.col("centroid"))
-            )
-        ),
-        4,
-    )
+    cos = F.round(F.avg(_cosine(F.col("e"), F.col("centroid"))), 4)
     return joined.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vecs"), cos.alias("avg_cos_to_centroid")
     )
@@ -290,13 +288,6 @@ def q73_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_sort(F.collect_list(F.struct("i", "c"))), lambda s: s.getField("c")
         ).alias("ce")
     )
-
-    def cos(a: str, b: str) -> Column:
-        return F.round(
-            _dot(F.col(a), F.col(b))
-            / F.sqrt(_dot(F.col(a), F.col(a)) * _dot(F.col(b), F.col(b))),
-            6,
-        )
 
     # Inverted-list assignment: nearest centroid per vector, computed
     # ENTIRELY map-side — the codebook collapses to a 1-row broadcast
@@ -381,7 +372,12 @@ def q73_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         assigned.join(F.broadcast(probe), "cell")
         .filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
-        .select("vec_id", "label", "cell", cos("e", "qe").alias("cosine"))
+        .select(
+            "vec_id",
+            "label",
+            "cell",
+            F.round(_cosine(F.col("e"), F.col("qe")), 6).alias("cosine"),
+        )
         .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
         .limit(10)
     )
@@ -432,11 +428,7 @@ def q79_retrieval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.round(
-                _dot(_as_double(F.col("embedding")), F.col("qe"))
-                / F.sqrt(
-                    _dot(_as_double(F.col("embedding")), _as_double(F.col("embedding")))
-                    * _dot(F.col("qe"), F.col("qe"))
-                ),
+                _cosine(_as_double(F.col("embedding")), F.col("qe")),
                 6,
             ).alias("cosine"),
         )
@@ -1034,14 +1026,7 @@ def q190_hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("vec_id").alias("doc_id"),
             F.round(
-                _dot(_as_double(F.col("embedding")), F.col("qe"))
-                / F.sqrt(
-                    _dot(
-                        _as_double(F.col("embedding")),
-                        _as_double(F.col("embedding")),
-                    )
-                    * _dot(F.col("qe"), F.col("qe"))
-                ),
+                _cosine(_as_double(F.col("embedding")), F.col("qe")),
                 6,
             ).alias("cosine"),
         )
@@ -1130,17 +1115,7 @@ def q241_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature width to keep bucket occupancy bounded, salt the hottest
     buckets (q229's salting plan), and multi-probe neighboring
     signatures for recall."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    sig = F.concat_ws(
-        "",
-        *[
-            F.when(F.element_at("embedding", i) >= 0, "1").otherwise("0")
-            for i in range(1, 7)
-        ],
-    )
-    n = emb.select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("e"), sig.alias("sig")
-    )
+    n = _sign_buckets(spark, sf_dir)
     anchors = n.filter(F.col("vec_id") < 40)
     cands = n.select(
         F.col("sig").alias("sig_b"),
@@ -1156,11 +1131,7 @@ def q241_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         "neg_id",
         "neg_label",
-        F.round(
-            _dot(F.col("e"), F.col("eb"))
-            / F.sqrt(_dot(F.col("e"), F.col("e")) * _dot(F.col("eb"), F.col("eb"))),
-            6,
-        ).alias("cosine"),
+        F.round(_cosine(F.col("e"), F.col("eb")), 6).alias("cosine"),
     )
     best = F.max(
         F.struct(
@@ -1557,9 +1528,7 @@ def q245_matryoshka_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def cosk(k: int) -> Column:
         a, b = F.slice(F.col("e"), 1, k), F.slice(F.col("qe"), 1, k)
-        return F.round(
-            _dot(a, b) / F.sqrt(_dot(a, a) * _dot(b, b)), 6
-        ).alias(f"c{k}")
+        return F.round(_cosine(a, b), 6).alias(f"c{k}")
 
     per = (
         n.filter(F.col("vec_id") != 0)
@@ -1662,11 +1631,7 @@ def q259_rag_context_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = cand.crossJoin(F.broadcast(qv)).select(
         "query_id",
         "vec_id",
-        F.round(
-            _dot(F.col("e"), F.col("qe"))
-            / F.sqrt(_dot(F.col("e"), F.col("e")) * _dot(F.col("qe"), F.col("qe"))),
-            6,
-        ).alias("cosine"),
+        F.round(_cosine(F.col("e"), F.col("qe")), 6).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("vec_id")
@@ -1822,11 +1787,6 @@ def q270_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = n.where(F.col("vec_id") >= 5)
 
-    def cos(a, b) -> Column:
-        return F.round(
-            _dot(a, b) / F.sqrt(_dot(a, a) * _dot(b, b)), 6
-        )
-
     dims = (
         corpus.select("label", F.posexplode("e").alias("i0", "val"))
         .groupBy("label", F.col("i0").alias("i"))
@@ -1844,7 +1804,7 @@ def q270_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = (
         corpus.crossJoin(F.broadcast(centroids))
         .select(
-            "vec_id", "cell", cos(F.col("e"), F.col("ce")).alias("ccos")
+            "vec_id", "cell", F.round(_cosine(F.col("e"), F.col("ce")), 6).alias("ccos")
         )
         .withColumn("rn", F.row_number().over(w_assign))
         .where(F.col("rn") == 1)
@@ -1856,7 +1816,9 @@ def q270_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = (
         qv.crossJoin(F.broadcast(centroids))
         .select(
-            "query_id", "cell", cos(F.col("qe"), F.col("ce")).alias("qcos")
+            "query_id",
+            "cell",
+            F.round(_cosine(F.col("qe"), F.col("ce")), 6).alias("qcos"),
         )
         .withColumn("rk", F.row_number().over(w_probe))
         .where(F.col("rk") <= 3)
@@ -1867,7 +1829,9 @@ def q270_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     scored = corpus.crossJoin(F.broadcast(qv)).select(
-        "query_id", "vec_id", cos(F.col("e"), F.col("qe")).alias("cosine")
+        "query_id",
+        "vec_id",
+        F.round(_cosine(F.col("e"), F.col("qe")), 6).alias("cosine"),
     )
     w_gt = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("vec_id")
@@ -1999,10 +1963,7 @@ def q272_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.slice(F.col(col), (s - 1) * 16 + 1, 16)
 
     def sub_cos(qs: int, ds: int) -> Column:
-        a, b = sub("qe", qs), sub("de", ds)
-        return F.round(
-            _dot(a, b) / F.sqrt(_dot(a, a) * _dot(b, b)), 4
-        )
+        return F.round(_cosine(sub("qe", qs), sub("de", ds)), 4)
 
     maxsim = F.round(
         sum(
@@ -2085,17 +2046,7 @@ def q280_multiprobe_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-local end to end. Reference contract: per-vector
     signature = map slot (``App.config:16``); top-k consolidation =
     reduce slot (``App.config:17``)."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    sig = F.concat_ws(
-        "",
-        *[
-            F.when(F.element_at("embedding", i) >= 0, "1").otherwise("0")
-            for i in range(1, 7)
-        ],
-    )
-    n = emb.select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("e"), sig.alias("sig")
-    )
+    n = _sign_buckets(spark, sf_dir)
     q = n.filter(F.col("vec_id") == 0).select(
         F.col("sig").alias("qsig"), F.col("e").alias("qe")
     )
@@ -2127,13 +2078,7 @@ def q280_multiprobe_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "label",
             F.col("pdist").alias("probe_dist"),
-            F.round(
-                _dot(F.col("e"), F.col("qe"))
-                / F.sqrt(
-                    _dot(F.col("e"), F.col("e")) * _dot(F.col("qe"), F.col("qe"))
-                ),
-                6,
-            ).alias("cosine"),
+            F.round(_cosine(F.col("e"), F.col("qe")), 6).alias("cosine"),
         )
         .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
         .limit(10)
@@ -2238,11 +2183,7 @@ def q286_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir)["embeddings"]
     n = emb.select("vec_id", "label", _as_double(F.col("embedding")).alias("e"))
     q = n.filter(F.col("vec_id") == 0).select(F.col("e").alias("qe"))
-    rel = F.round(
-        _dot(F.col("e"), F.col("qe"))
-        / F.sqrt(_dot(F.col("e"), F.col("e")) * _dot(F.col("qe"), F.col("qe"))),
-        4,
-    )
+    rel = F.round(_cosine(F.col("e"), F.col("qe")), 4)
     cands = (
         n.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
@@ -2253,11 +2194,7 @@ def q286_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = cands.select(F.col("vec_id").alias("va"), F.col("e").alias("ea"))
     b = cands.select(F.col("vec_id").alias("vb"), F.col("e").alias("eb"))
-    sim = F.round(
-        _dot(F.col("ea"), F.col("eb"))
-        / F.sqrt(_dot(F.col("ea"), F.col("ea")) * _dot(F.col("eb"), F.col("eb"))),
-        4,
-    )
+    sim = F.round(_cosine(F.col("ea"), F.col("eb")), 4)
     pairs = (
         a.join(F.broadcast(b), F.col("va") != F.col("vb"))
         .select("va", "vb", sim.alias("sim"))
@@ -2393,14 +2330,7 @@ def q290_lpt_shard_balancing(spark: SparkSession, sf_dir: str) -> DataFrame:
     slot (``App.config:16``); the packing fold = reduce slot
     (``App.config:17``)."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    sig = F.concat_ws(
-        "",
-        *[
-            F.when(F.element_at("embedding", i) >= 0, "1").otherwise("0")
-            for i in range(1, 7)
-        ],
-    )
-    cells = emb.select(sig.alias("sig")).groupBy("sig").agg(
+    cells = emb.select(_sign6().alias("sig")).groupBy("sig").agg(
         F.count(F.lit(1)).alias("n")
     )
     ordered = cells.agg(
@@ -2578,13 +2508,7 @@ def q293_ndcg_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("label") == F.col("q_label"), 1).otherwise(0).alias(
                 "gain"
             ),
-            F.round(
-                _dot(F.col("e"), F.col("qe"))
-                / F.sqrt(
-                    _dot(F.col("e"), F.col("e")) * _dot(F.col("qe"), F.col("qe"))
-                ),
-                4,
-            ).alias("cos"),
+            F.round(_cosine(F.col("e"), F.col("qe")), 4).alias("cos"),
         )
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
@@ -2858,17 +2782,7 @@ def q312_knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference contract: per-vector neighbor scoring = map slot
     (``App.config:16``); occurrence consolidation = reduce slot
     (``App.config:17``)."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    sig = F.concat_ws(
-        "",
-        *[
-            F.when(F.element_at("embedding", i) >= 0, "1").otherwise("0")
-            for i in range(1, 7)
-        ],
-    )
-    n = emb.select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("e"), sig.alias("sig")
-    )
+    n = _sign_buckets(spark, sf_dir)
     a = n.select("sig", F.col("vec_id").alias("va"), F.col("e").alias("ea"))
     b = n.select(
         F.col("sig").alias("sig_b"), F.col("vec_id").alias("vb"), F.col("e").alias("eb")
@@ -2879,11 +2793,7 @@ def q312_knn_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sig",
         "va",
         "vb",
-        F.round(
-            _dot(F.col("ea"), F.col("eb"))
-            / F.sqrt(_dot(F.col("ea"), F.col("ea")) * _dot(F.col("eb"), F.col("eb"))),
-            4,
-        ).alias("cos"),
+        F.round(_cosine(F.col("ea"), F.col("eb")), 4).alias("cos"),
     )
     w = Window.partitionBy("sig", "va").orderBy(F.desc("cos"), F.asc("vb"))
     knn = pairs.withColumn("rn", F.row_number().over(w)).where(
@@ -3030,7 +2940,7 @@ def q327_jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     # Identical consecutive vectors give den = 0 → NaN ratio (and the
     # oracle's CAST(floor(...)) would error); filter den > 0 on both
-    # sides (ADVICE r3).
+    # sides.
     den_of = lambda c: F.aggregate(  # noqa: E731
         F.transform(c, lambda d: d * d), F.lit(0.0), lambda acc, x: acc + x
     )
@@ -3440,7 +3350,7 @@ def q343_linear_model_gd_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Final rounding runs Spark-side (F.round = half-up) so the repo
     # keeps ONE rounding convention against DuckDB's round() — Python
     # round() is half-EVEN and diverges at exact half boundaries (the
-    # q345 rounding-mode discipline; ADVICE r3). round_nz normalizes
+    # q345 rounding-mode discipline). round_nz normalizes
     # the signed zero exactly like the oracle's `+ 0.0`.
     from azure_batch_map_reduce_spark.operators.ranks import round_nz
 
@@ -3703,14 +3613,7 @@ def q393_knn_label_disagreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         "own",
         "nb",
         "nb_label",
-        F.round(
-            _dot(F.col("ce"), F.col("pe"))
-            / F.sqrt(
-                _dot(F.col("ce"), F.col("ce"))
-                * _dot(F.col("pe"), F.col("pe"))
-            ),
-            6,
-        ).alias("cosine"),
+        F.round(_cosine(F.col("ce"), F.col("pe")), 6).alias("cosine"),
     )
     wk = Window.partitionBy("probe").orderBy(
         F.desc("cosine"), F.asc("nb")
@@ -4197,7 +4100,7 @@ def q429_grid_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominates, so plain label propagation stays; at 100 TB (rounds
     amortize over real data volume) either remedy applies unchanged.)
 
-    Cache lifecycle (r11 ADVICE item 2): the four persisted
+    Cache lifecycle: the four persisted
     intermediates (pts/pairs/deg/lab) ALL feed the returned lazy plan
     — deg and lab directly, pts and pairs through the neighbor and
     border joins — so none can be unpersisted here without recomputing
@@ -4509,7 +4412,7 @@ def q432_kcenter_coreset_selection(
     return out.orderBy("iter")
 
 
-# --- q453: multi-probe LSH recall audit (r12 verdict task 6) --------------
+# --- q453: multi-probe LSH recall audit ------------------------------------
 
 _Q453_SWEEP = (1, 3, 5, 7)  # probe budgets: home bucket .. all Hamming-1
 _Q453_COS = (
@@ -4611,8 +4514,8 @@ def q453_multiprobe_lsh_recall_audit(
     against brute-force ground truth, swept over the probe budget
     n_probe ∈ {_Q453_SWEEP} — the second half of the ANN evaluation
     matrix (q270 audits the IVF path; q280's multi-probe trade-off
-    was previously released without its recall curve — r12 verdict
-    task 6). Probe ORDER is query-aware, per Lv et al.: after the
+    was previously released without its recall curve). Probe ORDER
+    is query-aware, per Lv et al.: after the
     home bucket, Hamming-1 flips probe in ascending |q[i]| — the
     hyperplane the query sits closest to is the one a near neighbor
     most likely crossed. Emits per (query, n_probe): candidate count
@@ -4700,14 +4603,7 @@ def q453_multiprobe_lsh_recall_audit(
         "query_id",
         "vec_id",
         "sig",
-        F.round(
-            _dot(F.col("e"), F.col("qe"))
-            / F.sqrt(
-                _dot(F.col("e"), F.col("e"))
-                * _dot(F.col("qe"), F.col("qe"))
-            ),
-            6,
-        ).alias("cosine"),
+        F.round(_cosine(F.col("e"), F.col("qe")), 6).alias("cosine"),
     )
     w_gt = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("vec_id")

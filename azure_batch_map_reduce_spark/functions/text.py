@@ -15,6 +15,7 @@ from azure_batch_map_reduce_spark.catalog import load_tables
 from azure_batch_map_reduce_spark.operators.ranks import (
     bounded_order,
     half_up_ratio,
+    hex_int,
     round_nz,
 )
 from azure_batch_map_reduce_spark.registry import query
@@ -242,10 +243,7 @@ def q55_deterministic_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-neutral, so the oracle replays the assignment EXACTLY —
     stronger than a statistical check."""
     docs = load_tables(spark, sf_dir)["documents"]
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long") % 100
-    )
+    bucket = hex_int(F.md5(F.col("doc_id").cast("string")), 1, 8) % 100
     split = (
         F.when(bucket < 80, "train").when(bucket < 90, "valid").otherwise("test")
     )
@@ -1479,11 +1477,7 @@ def q221_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = tok.select(
         "doc_id",
         (
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit("feat|"), F.col("word"))), 1, 8),
-                16,
-                10,
-            ).cast("long")
+            hex_int(F.md5(F.concat(F.lit("feat|"), F.col("word"))), 1, 8)
             % 64
         ).alias("bucket"),
     )
@@ -3441,22 +3435,18 @@ def q332_symspell_typo_correction(spark: SparkSession, sf_dir: str) -> DataFrame
     ).select("doc_id", (F.col("p0") + 1).alias("pos"), "tok")
 
     def chan(tag: str) -> Column:
-        return F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(tag + "|"),
-                        F.col("doc_id").cast("string"),
-                        F.lit("|"),
-                        F.col("pos").cast("string"),
-                    )
-                ),
-                1,
-                8,
+        return hex_int(
+            F.md5(
+                F.concat(
+                    F.lit(tag + "|"),
+                    F.col("doc_id").cast("string"),
+                    F.lit("|"),
+                    F.col("pos").cast("string"),
+                )
             ),
-            16,
-            10,
-        ).cast("long")
+            1,
+            8,
+        )
 
     del_idx = chan("pos") % F.length("tok")  # 0-based deletion index
     stream = toks.select(
@@ -4718,8 +4708,7 @@ def q413_chao1_vocab_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     widened BEFORE the multiply on both engines (Spark
     decimal(38,0)·decimal, DuckDB ``CAST(f1 AS HUGEINT) * (f1-1)``) —
     an int64 product would silently wrap on Spark past f1≈3.0e9
-    singletons while DuckDB raises, a latent cross-engine divergence
-    (r9 ADVICE item 2).
+    singletons while DuckDB raises, a latent cross-engine divergence.
 
     Scale posture: one explode to token grain, then two partial+final
     hash aggregates ((source, tok) → source); the frequency-of-
@@ -4756,7 +4745,7 @@ def q413_chao1_vocab_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("d_observed")
             + half_up_ratio(
                 # Widen f1 BEFORE the product: int64 f1*(f1-1) wraps
-                # silently past f1~3.0e9 (r9 ADVICE item 2).
+                # silently past f1~3.0e9.
                 F.col("f1").cast("decimal(38,0)")
                 * (F.col("f1") - F.lit(1)).cast("decimal(38,0)"),
                 F.lit(2) * (F.col("f2") + F.lit(1)),
@@ -4849,7 +4838,6 @@ def q416_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.greatest(F.sum("s").cast("long"), F.lit(1)).alias("sentences"),
         F.sum("y").cast("long").alias("syllables"),
     )
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
 
     return agg.select(
         "source",
@@ -5086,11 +5074,6 @@ def q419_heaps_law_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     max(doc_id). Reference contract: tokenize+assign = map slot
     (``App.config:16``); vocabulary consolidation = reduce slot
     (``App.config:17``, ``Program.cs:351-384``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import (
-        bounded_order,
-        round_nz,
-    )
-
     docs = load_tables(spark, sf_dir)["documents"]
     mx = docs.agg(F.max("doc_id").alias("mid"))
     tok = (
@@ -5458,8 +5441,6 @@ def q436_deleted_interpolation_em(
     corpus size. Reference contract: per-token posterior = map slot
     (``App.config:16``); the λ re-estimate = reduce slot
     (``App.config:17``, ``Program.cs:351-384``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
-
     docs = load_tables(spark, sf_dir)["documents"]
     w = F.split(F.col("text"), " ")
     big = (
@@ -5650,7 +5631,7 @@ def q440_naive_bayes_langid_training(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Char-trigram Naive-Bayes language-ID TRAINING — the fastText/
-    CCNet gate trained in-plan (r11 verdict task 6): every pipeline
+    CCNet gate trained in-plan: every pipeline
     stage that consumes the corpus's ``lang`` column (q281's routing,
     q326's per-lang stats, q412's blocking) TRUSTS a lang-ID some
     model produced; this operator trains that model — add-one-smoothed
@@ -5665,7 +5646,7 @@ def q440_naive_bayes_langid_training(
     is 0.542/0.576/0.360 at sf0.001/0.01/0.1 against a majority-class
     baseline of 0.386/0.436/0.412 (the small-SF lift is trigram
     memorization; at sf0.1 the label is genuinely unlearnable from
-    text). The r11 verdict's "accuracy > 0.9" assumed separable
+    text). An "accuracy > 0.9" bar would assume separable
     languages; the invariant test pins what the fixture supports —
     accuracy strictly above the 1/|langs| = 0.2 uniform baseline at
     every SF, corpus conservation, and every lang predicted — and the
@@ -5856,7 +5837,7 @@ def _ulm_fold_expr(engine: str) -> str:
     return fold.format(seq=seq, init=init, body=body)
 
 
-# Per-document DP block bound (r12 verdict task 2). The q447 cost
+# Per-document DP block bound. The q447 cost
 # table and backtrack are immutable-list folds — O(n²) ELEMENT COPIES
 # in document length — so an unbounded doc makes a single task's
 # compute quadratic (a 100 kB doc would copy ~10¹⁰ cells). Splitting
@@ -6531,16 +6512,14 @@ def q447_unigram_lm_hard_em_mstep(
     map + bounded broadcast model + doc-grain gather) plus one
     (piece)-keyed recount aggregate. The full-cost-table DP is O(B²)
     in ELEMENT COPIES per ≤``_ULM_BLOCK``-char block (immutable-list
-    fold), i.e. O(n·B) per document — the r12 verdict's "chunk long
-    docs upstream" mitigation made ENGINE-NATIVE: the shared lattice
+    fold), i.e. O(n·B) per document — the "chunk long docs
+    upstream" mitigation made ENGINE-NATIVE: the shared lattice
     splits every doc's end-indexed arrays at the block bound before
     the DP, so per-task compute is bounded for ANY document length
     (sf0.1 A/B: 47-50 s unblocked → ≈21 s at B=64; SCALE.md §8c4).
     Reference contract: per-doc segmentation = map slot
     (``App.config:16``); usage recount + rank = reduce slots
     (``App.config:17``, ``Program.cs:351-384``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import bounded_order
-
     used = _ulm_component(spark, sf_dir, "used")
     t2 = used.agg(F.sum("n_used").alias("t"))
     rk = used.withColumn(
@@ -6677,8 +6656,8 @@ def _ulm_em2_oracle_sql() -> str:
     tags=("llm", "tokenizer", "unigram-lm", "em", "viterbi", "text"),
 )
 def q452_unigram_lm_em_round2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-LM EM ROUND 2 — closing the training loop (r12 verdict
-    task 5): q443 scores the corpus under the initial candidate model
+    """Unigram-LM EM ROUND 2 — closing the training loop: q443
+    scores the corpus under the initial candidate model
     (E-step 1), q447 re-estimates piece probabilities from the optimal
     segmentations' usage counts (M-step); this operator feeds that
     re-estimated model into a SECOND E-step and releases the
@@ -6718,8 +6697,6 @@ def q452_unigram_lm_em_round2(spark: SparkSession, sf_dir: str) -> DataFrame:
     segmentation = map slot (``App.config:16``); usage recount, model
     re-estimation and the released trajectory = reduce slots
     (``App.config:17``, ``Program.cs:351-384``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import half_up_ratio
-
     qs = 1_000_000
     cnts = _ulm_component(spark, sf_dir, "cnts")
     model0 = _ulm_model0(cnts)
@@ -6791,8 +6768,7 @@ def _ulm_pruned_block_arrays(
 ) -> DataFrame:
     """q454's blk2 — blocked cost arrays under the PRUNED model —
     derived from the session-shared blk1 plus a SPARSE kept-position
-    overlay instead of a full re-gather (r14 verdict task 1, guide
-    §5/§8.4 "decide with small rows").
+    overlay instead of a full re-gather ("decide with small rows").
 
     Why this is exact: model2 equals model1 on every kept piece and on
     every single-char piece, and is the +∞ sentinel elsewhere; the
@@ -6980,11 +6956,6 @@ def q454_unigram_lm_vocab_pruning(
     (``App.config:16``); usage rank, prune and the released
     comparison = reduce slots (``App.config:17``,
     ``Program.cs:351-384``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import (
-        bounded_order,
-        half_up_ratio,
-    )
-
     qs = 1_000_000
     cnts = _ulm_component(spark, sf_dir, "cnts")
     used = _ulm_component(spark, sf_dir, "used")
@@ -7142,7 +7113,7 @@ def q470_unigram_lm_em_convergence(
 ) -> DataFrame:
     """Unigram-LM hard-EM trained TO CONVERGENCE — the loop that
     makes q443 (E-step) / q447 (M-step) / q452 (round 2) a finished
-    trainer (r13 verdict task 5): alternate Viterbi-segment /
+    trainer: alternate Viterbi-segment /
     usage-recount / re-smooth until the exact-integer gate fires —
     round r stops the run when (cost_{{r-1}} − cost_r)·1000 <
     cost_{{r-1}}·{_ULM_EM_GATE_PML} (a {_ULM_EM_GATE_PML / 10}%
@@ -7541,6 +7512,28 @@ def _decode_oracle_sql() -> str:
     """
 
 
+def _bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(w1, w2, c)``: every adjacent lower-cased word pair of the
+    corpus with its count — the bigram model q460, q471 and q472
+    decode from."""
+    docs = load_tables(spark, sf_dir)["documents"]
+    ws = F.split(F.lower(F.col("text")), " ")
+    return (
+        docs.select(ws.alias("ws"))
+        .select(
+            F.explode(
+                F.expr(
+                    "transform(sequence(1, size(ws) - 1),"
+                    " i -> struct(element_at(ws, i) AS w1,"
+                    " element_at(ws, i + 1) AS w2))"
+                )
+            ).alias("p")
+        )
+        .groupBy(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+
+
 @query(
     "q460_greedy_bigram_decoding",
     oracle=_decode_oracle_sql(),
@@ -7567,8 +7560,8 @@ def q460_greedy_bigram_decoding(
     (count DESC, token ASC) — a total order; probabilities use the
     half-up idiom.
 
-    Scale posture (r14 single-pass rework, r13 verdict task 6): the
-    bigram model is ONE partial+final aggregate (persisted — it feeds
+    Scale posture: the bigram model is ONE partial+final aggregate
+    (persisted — it feeds
     two separate aggregate subtrees, the q239 exchange-reuse rule);
     the GREEDY POLICY TABLE — per predecessor its argmax successor,
     that pair's count, and the predecessor's total — is ONE more
@@ -7583,21 +7576,8 @@ def q460_greedy_bigram_decoding(
     regardless of N. Reference contract: bigram counting = map slot
     (``App.config:16``); the sequential argmax chain = reduce slot
     (``App.config:17``, ``Program.cs:351-384``)."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    ws = F.split(F.lower(F.col("text")), " ")
     bg = (
-        docs.select(ws.alias("ws"))
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(ws) - 1),"
-                    " i -> struct(element_at(ws, i) AS w1,"
-                    " element_at(ws, i + 1) AS w2))"
-                )
-            ).alias("p")
-        )
-        .groupBy(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .agg(F.count(F.lit(1)).alias("c"))
+        _bigram_counts(spark, sf_dir)
         # Model grain: observed bigram support (vocab²-bounded; 931 rows
         # at sf0.1). coalesce(1) keeps the map-side partial aggregation
         # fully distributed and lands only the FINAL agg + the two
@@ -7647,7 +7627,6 @@ def q460_greedy_bigram_decoding(
         tok, c, tot = policy[cur]
         out.append((k, tok, c, tot))
         cur = tok
-    from azure_batch_map_reduce_spark.operators.ranks import half_up_ratio
 
     return (
         spark.createDataFrame(
@@ -7749,22 +7728,7 @@ def q472_nucleus_successor_audit(
     reduce slot (``App.config:17``, ``Program.cs:351-384``)."""
     from pyspark.sql import Window as W
 
-    docs = load_tables(spark, sf_dir)["documents"]
-    ws = F.split(F.lower(F.col("text")), " ")
-    bg = (
-        docs.select(ws.alias("ws"))
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(ws) - 1),"
-                    " i -> struct(element_at(ws, i) AS w1,"
-                    " element_at(ws, i + 1) AS w2))"
-                )
-            ).alias("p")
-        )
-        .groupBy(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    bg = _bigram_counts(spark, sf_dir)
     wcum = (
         W.partitionBy("w1")
         .orderBy(F.desc("c"), F.asc("w2"))
@@ -7886,24 +7850,7 @@ def q471_beam_search_decoding(
     {_BEAM_L} top-{_BEAM_B} CTEs. Reference contract: bigram counting
     = map slot (``App.config:16``); beam expansion + rank = reduce
     slot (``App.config:17``, ``Program.cs:351-384``)."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    ws = F.split(F.lower(F.col("text")), " ")
-    bg = (
-        docs.select(ws.alias("ws"))
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(ws) - 1),"
-                    " i -> struct(element_at(ws, i) AS w1,"
-                    " element_at(ws, i + 1) AS w2))"
-                )
-            ).alias("p")
-        )
-        .groupBy(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .coalesce(1)
-        .persist()
-    )
+    bg = _bigram_counts(spark, sf_dir).coalesce(1).persist()
     vv = bg.agg(F.countDistinct("w2").alias("v"))
     c1 = bg.groupBy("w1").agg(F.sum("c").alias("tot"))
     model_rows = (

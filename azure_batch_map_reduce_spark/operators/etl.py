@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from azure_batch_map_reduce_spark.catalog import load_tables
-from azure_batch_map_reduce_spark.operators.ranks import half_up_ratio
+from azure_batch_map_reduce_spark.operators.ranks import half_up_ratio, hex_int
 from azure_batch_map_reduce_spark.registry import query
 
 
@@ -440,23 +440,17 @@ def q121_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def checksums(df: DataFrame) -> DataFrame:
-        h = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.col("o_orderkey").cast("string"),
-                        F.round(F.col("o_totalprice") * 100)
-                        .cast("long")
-                        .cast("string"),
-                    )
-                ),
-                1,
-                8,
+        h = hex_int(
+            F.md5(
+                F.concat_ws(
+                    ":",
+                    F.col("o_orderkey").cast("string"),
+                    F.round(F.col("o_totalprice") * 100).cast("long").cast("string"),
+                )
             ),
-            16,
-            10,
-        ).cast("long")
+            1,
+            8,
+        )
         return df.groupBy((F.col("o_orderkey") % 64).alias("bucket")).agg(
             F.sum(h).alias("checksum"), F.count(F.lit(1)).alias("n")
         )
@@ -1880,22 +1874,18 @@ def q362_merkle_antientropy_repair(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
     def digest(df):
-        row_h = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        F.col("k").cast("string"),
-                        F.col("cents").cast("string"),
-                        F.col("st"),
-                    )
-                ),
-                1,
-                12,
+        row_h = hex_int(
+            F.md5(
+                F.concat_ws(
+                    "|",
+                    F.col("k").cast("string"),
+                    F.col("cents").cast("string"),
+                    F.col("st"),
+                )
             ),
-            16,
-            10,
-        ).cast("long")
+            1,
+            12,
+        )
         return df.groupBy("bucket").agg(
             F.count(F.lit(1)).alias("n"), F.sum(row_h).alias("dig")
         )

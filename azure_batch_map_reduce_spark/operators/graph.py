@@ -283,8 +283,6 @@ def q114_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     single aggregation. The hop cap bounds blow-up on cyclic graphs,
     the standard guard for recursive SQL on dense data.
     """
-    from azure_batch_map_reduce_spark.catalog import register_views
-
     register_views(spark, sf_dir)
     return spark.sql(_REACH_SQL)
 
@@ -658,7 +656,7 @@ def q401_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KCORE_K = 2  # peel threshold: both endpoints must keep degree >= K
 _KCORE_MAX_ROUNDS = 12  # Spark-side safety bound (loop exits at fixpoint)
-# Oracle unroll depth = the engine's round bound (r11 ADVICE item 1):
+# Oracle unroll depth = the engine's round bound:
 # rounds past the fixpoint are idempotent no-ops, so unrolling to the
 # full engine bound keeps the oracle exact for ANY dataset the engine
 # accepts — previously 8 < 12 left a latent window where a 9-12-round

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from azure_batch_map_reduce_spark.catalog import load_tables
-from azure_batch_map_reduce_spark.operators.ranks import half_up_ratio
+from azure_batch_map_reduce_spark.operators.ranks import half_up_ratio, hex_int
 from azure_batch_map_reduce_spark.registry import query
 
 
@@ -767,11 +767,7 @@ def q211_spatial_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def coord(salt: str, col):
         return (
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit(f"{salt}|"), col.cast("string"))), 1, 8),
-                16,
-                10,
-            ).cast("long")
+            hex_int(F.md5(F.concat(F.lit(f"{salt}|"), col.cast("string"))), 1, 8)
             / F.lit(4294967296.0)
         )
 
@@ -1261,7 +1257,7 @@ def q329_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.1% of a 100 TB orders table can exceed the broadcast limit — so
     no forced hint: AQE promotes the join to broadcast from the
     survivor set's RUNTIME size and falls back to shuffle when it
-    must (ADVICE r3). The final 100-row cut is TakeOrdered.
+    must. The final 100-row cut is TakeOrdered.
     Reference: L7 barrier then L8 gather of a filtered aggregate
     (``Program.cs:351-384``)."""
     t = load_tables(spark, sf_dir)

@@ -313,6 +313,14 @@ def round_nz(col: Column, digits: int) -> Column:
     return F.round(col, digits) + F.lit(0.0)
 
 
+def hex_int(hex_col: Column, start: int | Column, n_digits: int) -> Column:
+    """The engine's deterministic hash rule: ``n_digits`` hex digits of
+    a digest string from 1-based ``start``, read as a BIGINT. Pairs
+    with the oracle form ``('0x' || substr(<hex>, start, n))::BIGINT``;
+    up to 15 digits stay exact in int64 on both engines."""
+    return F.conv(F.substring(hex_col, start, n_digits), 16, 10).cast("long")
+
+
 def half_up_ratio(num: Column, den: Column, digits: int) -> Column:
     """Exact half-up rounding of a NONNEGATIVE integer ratio
     ``num/den`` to ``digits`` decimals, computed entirely in

@@ -32,6 +32,7 @@ from azure_batch_map_reduce_spark.operators.ranks import (
     distributed_running_extremum,
     distributed_running_sum,
     half_up_ratio,
+    hex_int,
     round_nz,
 )
 from azure_batch_map_reduce_spark.registry import query
@@ -1476,10 +1477,10 @@ def q156_portable_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     allk = frames[0].unionAll(frames[1]).unionAll(frames[2]).distinct()
     h = F.md5(F.concat(F.lit("hll|"), F.col("k").cast("string")))
-    w = F.conv(F.substring(h, 3, 8), 16, 10).cast("long")
+    w = hex_int(h, 3, 8)
     keyed = allk.select(
         "key_col",
-        (F.conv(F.substring(h, 1, 2), 16, 10).cast("long") % 64).alias("j"),
+        (hex_int(h, 1, 2) % 64).alias("j"),
         F.least(
             # bin() never prints leading zeros, so length(bin(w)) IS
             # 32 - clz(w) for w > 0 — no per-row regex needed (the
@@ -2170,15 +2171,7 @@ def q196_portable_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def pos(i: int, col):
         return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"bloom{i}|"), col.cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
+            hex_int(F.md5(F.concat(F.lit(f"bloom{i}|"), col.cast("string"))), 1, 8)
             % _BLOOM_M
         )
 
@@ -2760,9 +2753,7 @@ def q254_portable_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.md5(F.concat(F.lit("cms|"), k.cast("string")))
 
     def idx(j: Column, h: Column) -> Column:
-        return (
-            F.conv(F.substring(h, 1 + j * 8, 8), 16, 10).cast("long") % 32
-        ).cast("int")
+        return (hex_int(h, 1 + j * 8, 8) % 32).cast("int")
 
     # Digest ONCE per row (a scalar column survives projection
     # collapse), then explode the j axis and window into the digest.
@@ -3078,11 +3069,11 @@ def q294_sliding_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     consolidation = reduce slot (``App.config:17``)."""
     events = load_tables(spark, sf_dir)["events"]
     h = F.md5(F.concat(F.lit("hll|"), F.col("user_id").cast("string")))
-    wrd = F.conv(F.substring(h, 3, 8), 16, 10).cast("long")
+    wrd = hex_int(h, 3, 8)
     keyed = events.select(
         F.date_trunc("day", F.col("ts")).alias("day"),
         "user_id",
-        (F.conv(F.substring(h, 1, 2), 16, 10).cast("long") % 64).alias("j"),
+        (hex_int(h, 1, 2) % 64).alias("j"),
         F.least(
             F.when(wrd == 0, F.lit(33)).otherwise(33 - F.length(F.bin(wrd))),
             F.lit(30),
@@ -3122,7 +3113,6 @@ def q294_sliding_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     est = F.when(
         F.col("v") > 0, 64 * F.log(64.0 / F.col("v").cast("double"))
     ).otherwise(F.lit(0.709 * 4096.0 * 1073741824.0) / F.col("sum_int"))
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
 
     return (
         state.join(exact, "day")
@@ -3237,14 +3227,9 @@ def q302_cms_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .crossJoin(F.broadcast(rows_j))
             .select(
                 "j",
-                (
-                    F.conv(
-                        F.substring(h, F.lit(1) + F.lit(8) * F.col("j"), 8),
-                        16,
-                        10,
-                    ).cast("long")
-                    % 32
-                ).cast("int").alias("idx"),
+                (hex_int(h, F.lit(1) + F.lit(8) * F.col("j"), 8) % 32)
+                .cast("int")
+                .alias("idx"),
             )
             .groupBy("j", "idx")
             .agg(F.count(F.lit(1)).alias("c"))
@@ -3275,7 +3260,6 @@ def q302_cms_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex_fk = li.join(orders, li["l_orderkey"] == orders["o_orderkey"]).agg(
         F.count(F.lit(1)).alias("n")
     )
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
 
     def row(name, est, ex):
         return (
@@ -3439,7 +3423,6 @@ def q309_bloom_join_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE digest per probe row (positions are nation-independent);
     # Catalyst does not CSE repeated md5 calls, so materialize the four
     # window positions as columns BEFORE the nation fan-out.
-    from azure_batch_map_reduce_spark.catalog import rebalance_for_cpu
 
     dg = F.md5(F.concat(F.lit("bjoin|"), F.col("l_suppkey").cast("string")))
     # Single-row-group fixture parquet caps the scan at ~1 task; the
@@ -3448,10 +3431,7 @@ def q309_bloom_join_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe0 = rebalance_for_cpu(li.select("l_suppkey")).select(
         F.col("l_suppkey").alias("sk"),
         *[
-            (
-                F.conv(F.substring(dg, 1 + 8 * i, 8), 16, 10).cast("long")
-                % _BJ_M
-            ).alias(f"p{i}")
+            (hex_int(dg, 1 + 8 * i, 8) % _BJ_M).alias(f"p{i}")
             for i in range(_BJ_K)
         ],
     )
@@ -3556,17 +3536,24 @@ def _ols3_formulas() -> dict[str, str]:
 _OLS3 = _ols3_formulas()
 
 
-def _ols_moment_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One row of exact BIGINT moment sums over lineitem's scaled-integer
-    observations x1 = quantity, x2 = discount in basis points, y = price
-    in whole dollars: n, s1, s2, s11, s12, s22, sy, s1y, s2y, syy. A
-    caller that never reads a sum leaves it to column pruning."""
+def _ols_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lineitem's scaled-integer OLS observations, keyed by
+    ``(l_orderkey, l_linenumber)``: x1 = quantity, x2 = discount in
+    basis points, y = price in whole dollars."""
     li = load_tables(spark, sf_dir)["lineitem"]
-    obs = li.select(
+    return li.select(
+        "l_orderkey",
+        "l_linenumber",
         F.col("l_quantity").cast("long").alias("x1"),
         F.round(F.col("l_discount") * 10000).cast("long").alias("x2"),
         F.round(F.col("l_extendedprice")).cast("long").alias("y"),
     )
+
+
+def _ols_moment_sums(obs: DataFrame) -> DataFrame:
+    """One row of exact BIGINT moment sums over :func:`_ols_obs`: n,
+    s1, s2, s11, s12, s22, sy, s1y, s2y, syy. A caller that never reads
+    a sum (or the row keys) leaves it to column pruning."""
     return obs.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x1").alias("s1"),
@@ -3637,7 +3624,7 @@ def q341_multiple_regression_closed_form(
     normal-equations tradeoff (p small, n huge). Reference contract:
     per-row moment accumulation = map slot (``App.config:16``);
     system solve = reduce slot (``App.config:17``)."""
-    sums = _ols_moment_sums(spark, sf_dir)
+    sums = _ols_moment_sums(_ols_obs(spark, sf_dir))
     rows = [
         ("intercept", _OLS3["b0"], 1),
         ("quantity", _OLS3["b1"], 2),
@@ -3743,7 +3730,7 @@ def q342_ridge_regularization_path(
     passes. Reference contract: moment accumulation = map slot
     (``App.config:16``); path solve = reduce slot
     (``App.config:17``)."""
-    sums = _ols_moment_sums(spark, sf_dir)
+    sums = _ols_moment_sums(_ols_obs(spark, sf_dir))
     structs = []
     for lam in _RIDGE_LAMBDAS:
         fs = _ridge2_formulas(f"CAST({lam} AS DOUBLE)")
@@ -4182,27 +4169,8 @@ def q456_regression_influence_diagnostics(
     Reference contract: per-row diagnostic = map slot
     (``App.config:16``); top-k consolidation = reduce slot
     (``App.config:17``, ``Program.cs:351-384``)."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    obs = li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.col("l_quantity").cast("long").alias("x1"),
-        F.round(F.col("l_discount") * 10000).cast("long").alias("x2"),
-        F.round(F.col("l_extendedprice")).cast("long").alias("y"),
-    )
-    sums = obs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x1").alias("s1"),
-        F.sum("x2").alias("s2"),
-        F.sum(F.col("x1") * F.col("x1")).alias("s11"),
-        F.sum(F.col("x1") * F.col("x2")).alias("s12"),
-        F.sum(F.col("x2") * F.col("x2")).alias("s22"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x1") * F.col("y")).alias("s1y"),
-        F.sum(F.col("x2") * F.col("y")).alias("s2y"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    diag = obs.crossJoin(F.broadcast(sums)).select(
+    obs = _ols_obs(spark, sf_dir)
+    diag = obs.crossJoin(F.broadcast(_ols_moment_sums(obs))).select(
         "l_orderkey",
         "l_linenumber",
         "x1",

@@ -2915,7 +2915,6 @@ def q295_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("term"),
         )
     )
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
 
     return (
         scored.groupBy("channel")
@@ -3927,7 +3926,6 @@ def q373_markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFra
     sre = 0.0
     for _, _, _, re_ in out_rows:
         sre = sre + re_
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
 
     return (
         spark.createDataFrame(

@@ -34,7 +34,7 @@ REGISTRY: dict[str, Query] = {}
 
 # Every oracle-less query MUST be accounted for here — rows-only status
 # is a deliberate, documented property, never an accident the driver
-# could read as a silent failure (r4 verdict task 6).
+# could read as a silent failure.
 # ``write_operator_index`` enforces the invariant and publishes the
 # rationale; ``tests/test_output_contract.py`` pins it.
 ROWS_ONLY_RATIONALE: dict[str, str] = {

@@ -529,7 +529,7 @@ if _HAVE_STREAM:
         return out.orderBy("source", "lang")
 
 
-# --- r12 verdict task 4: REAL multi-batch progression drill ---------------
+# --- REAL multi-batch progression drill -----------------------------------
 
 if _HAVE_STREAM:
 
@@ -677,7 +677,7 @@ if _HAVE_STREAM:
 
 # --- q469: end-to-end exactly-once through BOTH Python endpoints ----------
 #
-# r13 verdict task 3: q446 proves the streaming source's offset
+# q446 proves the streaming source's offset
 # contract and q444 proves the sink's commit/abort — separately. This
 # composes them into the reference's full L5->L6->L8->L9 loop as one
 # living pipeline: a paced Python streaming source feeds micro-batches
@@ -929,7 +929,7 @@ if _HAVE_STREAM and _HAVE_WRITER:
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
         """END-TO-END EXACTLY-ONCE through BOTH custom Python
-        endpoints (r13 verdict task 3) — the reference's full
+        endpoints — the reference's full
         L5→L6→L8→L9 loop as one living pipeline: the paced Python
         STREAMING SOURCE (q446's offset contract, made restart-proof
         by journal-recovered pacing) feeds real micro-batches through

@@ -174,8 +174,8 @@ try:
     # The typed-state API needs Spark 4.0+ AND protobuf (its state-server
     # wire format); gate on both so the module imports on any runtime.
     #
-    # FORMAL RETIREMENT OF THE REAL PATH ON THIS RUNTIME (r14, closing
-    # the r13 verdict's task 2): `transformWithStateInPandas` cannot
+    # FORMAL RETIREMENT OF THE REAL PATH ON THIS RUNTIME:
+    # `transformWithStateInPandas` cannot
     # execute here, permanently, because the Python worker half of the
     # state server (`pyspark/sql/streaming/stateful_processor_api_client
     # .py`) imports `pyspark.sql.streaming.proto.StateMessage_pb2` —
@@ -781,7 +781,7 @@ def run_restart_drill(
     tested at alternative crash points in BOTH modes
     (``tests/test_streaming.py::test_q405_restart_invariant_to_cut``).
 
-    Two modes (r8 verdict task 3):
+    Two modes:
 
     - **drill** (``sink_dir=None``): self-contained — a scratch tree
       holds src/out/ckpt and is removed on every exit path, which
@@ -887,8 +887,8 @@ def q410_tws_restart_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful", "checkpoint", "restart", "sink"),
 )
 def q411_restart_writethrough_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION shape of the q405 restart drill (r8 verdict task
-    3): same two-phase kill/restart against one checkpoint, but the
+    """The PRODUCTION shape of the q405 restart drill: same
+    two-phase kill/restart against one checkpoint, but the
     parquet sink stays in place and the snapshot reconciliation is a
     fully distributed table WRITE to ``sink_dir/final`` — the returned
     frame is a lazy scan of that table and NO session row ever

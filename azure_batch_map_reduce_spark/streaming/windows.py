@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from azure_batch_map_reduce_spark.catalog import (
     align_session_for_oracle,
@@ -24,7 +24,7 @@ from azure_batch_map_reduce_spark.catalog import (
     normalize_event_ts,
     table_path,
 )
-from azure_batch_map_reduce_spark.operators.ranks import half_up_ratio
+from azure_batch_map_reduce_spark.operators.ranks import half_up_ratio, hex_int
 from azure_batch_map_reduce_spark.registry import query
 
 
@@ -181,8 +181,6 @@ def dedup_first_event(events: DataFrame) -> DataFrame:
     ``dropDuplicatesWithinWatermark`` (arrival-order, tested in
     tests/test_streaming.py); batch uses an explicit total order so the
     result is reproducible and oracle-checkable."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("user_id", "event_type").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )
@@ -424,8 +422,6 @@ def q142_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; the dim is re-resolvable per batch, which is how
     dimension updates flow in without restarting the query.
     """
-    from azure_batch_map_reduce_spark.catalog import load_tables
-
     ev = events_stream(spark, sf_dir)
     cust = load_tables(spark, sf_dir)["customer"].select(
         F.col("c_custkey"), F.col("c_mktsegment").alias("segment")
@@ -501,6 +497,15 @@ def q172_stream_windowed_distinct(spark: SparkSession, sf_dir: str) -> DataFrame
     return windowed_distinct_users(events).orderBy("w_start", "event_type")
 
 
+def _arrival_key() -> Column:
+    """Per-event arrival-order hash, ``md5('arr|' || event_id)`` read
+    as a BIGINT: the deterministic jitter q192, q304 and q305 order and
+    offset events by (the fixture's event_ids follow event time)."""
+    return hex_int(
+        F.md5(F.concat(F.lit("arr|"), F.col("event_id").cast("string"))), 1, 8
+    )
+
+
 @query(
     "q192_lateness_profile",
     oracle="""
@@ -564,18 +569,9 @@ def q192_lateness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     live stream the same running max is the engine's internal watermark
     tracker; this batch twin makes it observable."""
     ev = load_tables(spark, sf_dir)["events"]
-    arrival_key = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("arr|"), F.col("event_id").cast("string"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
     w = (
         Window.partitionBy("user_id")
-        .orderBy(arrival_key.asc(), F.col("event_id").asc())
+        .orderBy(_arrival_key().asc(), F.col("event_id").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     arr = ev.withColumn("_hwm", F.max("ts").over(w)).select(
@@ -1015,10 +1011,10 @@ def q287_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     consolidation = reduce slot (``App.config:17``)."""
     ev = events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
     h = F.md5(F.concat(F.lit("hll|"), F.col("user_id").cast("string")))
-    w = F.conv(F.substring(h, 3, 8), 16, 10).cast("long")
+    w = hex_int(h, 3, 8)
     keyed = ev.select(
         "ts",
-        (F.conv(F.substring(h, 1, 2), 16, 10).cast("long") % _SHLL_M).alias("j"),
+        (hex_int(h, 1, 2) % _SHLL_M).alias("j"),
         F.least(
             F.when(w == 0, F.lit(33)).otherwise(33 - F.length(F.bin(w))),
             F.lit(30),
@@ -1130,7 +1126,6 @@ def q301_lambda_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied to streaming. Reference contract: the dual map paths are
     the map slot (``App.config:16``); the serving merge = reduce slot
     (``App.config:17``)."""
-    from azure_batch_map_reduce_spark.catalog import load_tables
     from azure_batch_map_reduce_spark.operators.ranks import round_nz
 
     ev = events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
@@ -1235,18 +1230,7 @@ def q304_out_of_order_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     map slot (``App.config:16``); profile consolidation = reduce slot
     (``App.config:17``)."""
     events = load_tables(spark, sf_dir)["events"]
-    arrival = F.unix_micros("ts") + (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("arr|"), F.col("event_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 120000000
-    )
+    arrival = F.unix_micros("ts") + _arrival_key() % 120000000
     jit = events.select(
         "event_type", "user_id", "ts", "event_id", arrival.alias("arrival_us")
     )
@@ -1349,18 +1333,7 @@ def q305_watermark_delay_recommendation(spark: SparkSession, sf_dir: str) -> Dat
     )
 
     events = load_tables(spark, sf_dir)["events"]
-    arrival = F.unix_micros("ts") + (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("arr|"), F.col("event_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 120000000
-    )
+    arrival = F.unix_micros("ts") + _arrival_key() % 120000000
     arr = distributed_running_extremum(
         events.select(
             "event_id",

@@ -1121,6 +1121,29 @@ def test_q399_band_probe_is_delta_sided(spark, sf_dir):
         )
 
 
+def test_minhash_signatures_read_the_persisted_shingle_sets(spark, sf_dir):
+    """`_minhash_signatures` builds the trigram rows once: the minhash
+    aggregate `mh` reads the persisted shingle sets `w`, so its
+    optimized logical plan has no Window (the lead() pass of
+    `_trigram_rows`) of its own — only w's InMemoryRelation."""
+    from azure_batch_map_reduce_spark.functions.dedup import _minhash_signatures
+
+    mh, w = _minhash_signatures(load_tables(spark, sf_dir)["documents"])
+
+    def walk(node):
+        yield node.nodeName()
+        ch = node.children()
+        for i in range(ch.size()):
+            yield from walk(ch.apply(i))
+
+    try:
+        names = list(walk(mh._jdf.queryExecution().optimizedPlan()))
+    finally:
+        w.unpersist()
+    assert "InMemoryRelation" in names, names
+    assert "Window" not in names, names
+
+
 def test_aqe_skew_join_splits_hot_key(spark, sf_dir):
     """r5 verdict task 6: adversarial skew fixture for q404's hot-key
     join. Forces the 100 TB regime at test scale — broadcast OFF (so

@@ -92,12 +92,16 @@ def test_application_id_only_in_session_module():
     [
         ("_minhash_exprs(", "functions/dedup.py::_minhash_signatures"),
         ("bpe_merge_symbols(", "functions/text.py::_bpe_train"),
+        ("F.conv(", "operators/ranks.py::hex_int"),
+        ('F.element_at("embedding", i) >= 0', "functions/similarity.py::_sign6"),
+        ("i -> struct(element_at(ws, i) AS w1,", "functions/text.py::_bigram_counts"),
     ],
 )
 def test_copied_stage_is_built_in_one_place(call, owner):
-    """The MinHash signature stage and the BPE trainer are each built by
-    one function; a query that needs the stage calls that function
-    instead of calling the stage's pieces again. Hits are named by the
+    """The MinHash signature stage, the BPE trainer, the md5 → BIGINT
+    hash rule, the sign-LSH signature and the bigram count table are
+    each built by one function; a query that needs one calls that
+    function instead of writing its pieces again. Hits are named by the
     enclosing top-level function."""
     callers = set()
     for path in sorted(PKG.rglob("*.py")):
