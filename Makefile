@@ -4,12 +4,15 @@
 # shipping. `verify-sf01` stress-runs the same differential at sf0.1
 # (600k lineitem): traps that survive 60k rows (exact .5-cent rounding
 # boundaries, signed-zero epsilons, tie collisions) surface here.
-# Plain `test` runs everything at sf0.001.
+# `test` is ROADMAP.md's Tier-1 gate: everything at sf0.001 under the
+# gate's timeout, listing the 25 slowest tests.
 
 .PHONY: test verify-driver verify-sf01 bench bench-commit operators
 
 test:
-	python -m pytest tests/ -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+		timeout -k 10 2670 python -m pytest tests/ -q \
+		--continue-on-collection-errors -p no:cacheprovider --durations=25
 
 verify-driver:
 	SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/test_oracle_diff.py -q

@@ -5,13 +5,32 @@ directories (``App.config:4-23``, loaded ``Program.cs:44-61``); here the
 catalog is the set of parquet tables under one scale-factor directory
 (see TESTDATA.md / FIXTURES.md), registered as temp views so both the
 DataFrame API and ``spark.sql`` can reach them.
+
+Like the reference, the catalog is metadata the driver reads: each
+table's schema comes from one parquet footer read on the driver
+(:func:`parquet_schema`), so loading the catalog or starting a stream
+over a table runs no Spark job.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.errors import PySparkTypeError
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    LongType,
+    MapType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+)
 
 TABLES = (
     "region",
@@ -107,9 +126,6 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
       ``to_utc_timestamp(ts, 'UTC')`` relabels it without shifting
       (a bare cast would re-interpret in session-local time).
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, TimestampNTZType
-
     dt = df.schema[col].dataType
     if isinstance(dt, LongType):
         df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
@@ -118,23 +134,119 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+def data_files(path: str) -> list[str]:
+    """The data files of a parquet table path, sorted: the path itself
+    when it is one file, else every file under the directory except
+    ``_``- and ``.``-prefixed files and directories (``_SUCCESS``,
+    ``.crc``, a file sink's ``_spark_metadata``), which Spark's own
+    file index skips too."""
+    if os.path.isfile(path):
+        return [path]
+    found = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        found += [os.path.join(root, f) for f in files if not f.startswith((".", "_"))]
+    return sorted(found)
+
+
+# Footer key under which Spark writes the table's own schema as JSON.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+class ParquetSchemaError(ValueError):
+    """A parquet footer whose schema :func:`parquet_schema` cannot map
+    to the Spark schema a parquet read would give."""
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """Spark's ``DataType.asNullable``: a file source reads every
+    field, array element and map value as nullable."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType))
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType))
+    return dt
+
+
+def _spark_type(at: pa.DataType, table: str, column: str) -> DataType:
+    """The Spark type a parquet read gives an Arrow footer type, under
+    the session rules :func:`align_session_for_oracle` sets: INT64 NANOS
+    timestamps read as ``LongType`` (``nanosAsLong``), other timestamps
+    as ``TimestampType`` (``inferTimestampNTZ`` off), every field
+    nullable. Types the parquet reader maps differently from Arrow
+    (durations, times, nulls) raise, as does any type Arrow conversion
+    rejects."""
+    t = pa.types
+    if t.is_struct(at):
+        return StructType(
+            [StructField(f.name, _spark_type(f.type, table, f"{column}.{f.name}")) for f in at]
+        )
+    if t.is_list(at) or t.is_large_list(at) or t.is_fixed_size_list(at):
+        return ArrayType(_spark_type(at.value_type, table, column))
+    if t.is_map(at):
+        return MapType(
+            _spark_type(at.key_type, table, column),
+            _spark_type(at.item_type, table, column),
+        )
+    if t.is_timestamp(at) and at.unit == "ns":
+        return LongType()
+    if not (t.is_duration(at) or t.is_time(at) or t.is_null(at)):
+        try:
+            return from_arrow_type(at, prefer_timestamp_ntz=False)
+        except PySparkTypeError:
+            pass
+    raise ParquetSchemaError(f"{table}: column {column} has unsupported type {at}")
+
+
+def parquet_schema(path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, from one footer
+    read on the driver — no Spark job. Like Spark's inference without
+    ``mergeSchema``, it reads the first data file of :func:`data_files`:
+    the schema Spark stored in the footer if it wrote the file, else the
+    footer's Arrow schema mapped by :func:`_spark_type`. INT96 columns
+    with no Spark schema raise :class:`ParquetSchemaError`."""
+    files = data_files(path)
+    if not files or (files != [path] and os.path.dirname(files[0]) != os.path.normpath(path)):
+        raise ParquetSchemaError(f"{path}: not one file or a directory of part files")
+    meta = pq.read_metadata(files[0])
+    spark_json = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if spark_json is not None:
+        return _as_nullable(StructType.fromJson(json.loads(spark_json)))
+    for i in range(meta.num_columns):
+        col = meta.schema.column(i)
+        if col.physical_type == "INT96":
+            raise ParquetSchemaError(f"{path}: column {col.path} has unsupported type INT96")
+    return StructType(
+        [StructField(f.name, _spark_type(f.type, path, f.name)) for f in meta.schema.to_arrow_schema()]
+    )
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema given up front from
+    :func:`parquet_schema`, so building the frame runs no Spark job."""
+    return spark.read.schema(parquet_schema(path)).parquet(path)
+
+
 def _load_one(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    align_session_for_oracle(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_table(spark, table_path(sf_dir, name))
     if name == "events":
         df = normalize_event_ts(df)
     return df
 
 
 # (session, sf_dir) → (session ref, tables). Building a parquet
-# DataFrame costs ~75 ms of driver-side setup (file listing + footer
-# schema read) per table; re-resolving all 10 tables on every query
-# invocation would tax each query ~0.8 s that has nothing to do with its
-# plan. DataFrames are immutable logical plans, so reuse is safe. The
-# session object is held strongly in the value so a dead session's id()
-# can't be recycled into a false cache hit. The cached plan pins the
-# file listing — call :func:`clear_table_cache` after rewriting fixture
-# files in place.
+# DataFrame costs one footer read on the driver (no Spark job) plus
+# Spark's file listing and plan analysis per table; re-resolving all 10
+# tables on every query invocation would still tax each query with work
+# that has nothing to do with its plan. DataFrames are immutable logical
+# plans, so reuse is safe. The session object is held strongly in the
+# value so a dead session's id() can't be recycled into a false cache
+# hit. The cached plan pins the file listing and schema — call
+# :func:`clear_table_cache` after rewriting fixture files in place.
 _TABLE_CACHE: dict[tuple[int, str], tuple[SparkSession, dict[str, DataFrame]]] = {}
 
 
@@ -145,15 +257,14 @@ def clear_table_cache() -> None:
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load every fixture table as a DataFrame (lazy parquet scans),
     memoized per (session, sf_dir)."""
+    # Re-asserted on every call: a caller-owned session may have flipped
+    # timezone/parquet confs between queries.
+    align_session_for_oracle(spark)
     key = (id(spark), os.path.abspath(sf_dir))
     hit = _TABLE_CACHE.get(key)
     if hit is None:
         hit = (spark, {name: _load_one(spark, sf_dir, name) for name in TABLES})
         _TABLE_CACHE[key] = hit
-    else:
-        # Still re-assert the runtime confs: a caller-owned session may
-        # have flipped timezone/parquet confs between queries.
-        align_session_for_oracle(spark)
     return dict(hit[1])
 
 

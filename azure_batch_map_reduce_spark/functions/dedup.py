@@ -28,14 +28,14 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from azure_batch_map_reduce_spark.catalog import load_tables
+from azure_batch_map_reduce_spark.catalog import load_tables, scratch_dir
 from azure_batch_map_reduce_spark.functions.similarity import _as_double, _dot
 from azure_batch_map_reduce_spark.operators.ranks import (
     half_up_ratio,
     hex_int,
     round_nz,
 )
-from azure_batch_map_reduce_spark.registry import query
+from azure_batch_map_reduce_spark.registry import REGISTRY, query
 
 # 16 fixed affine permutations for MinHash: (a, b) applied as
 # (a*wid + b) % P. P is the Mersenne prime 2^31-1; constants are
@@ -1241,8 +1241,6 @@ def q228_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cluster_profile_oracle() -> str:
     """Wraps q66's transitive-closure oracle as a CTE and profiles the
     cluster-size distribution (nested WITH is legal in a CTE body)."""
-    from azure_batch_map_reduce_spark.registry import REGISTRY
-
     q66 = REGISTRY["q66_neardup_clusters"].oracle
     return f"""
     WITH clusters AS ({q66}),
@@ -3482,8 +3480,6 @@ def q421_dedup_corpus_materialization(
     — no extra pass. Reference contract: plan execution = reduce slot
     (``App.config:17``); download sink = ``Program.cs:474-497``
     (write at 488-493)."""
-    from azure_batch_map_reduce_spark.catalog import scratch_dir
-
     docs = load_tables(spark, sf_dir)["documents"]
     plan = q415_canonical_doc_selection(spark, sf_dir)
     drop = plan.where(~F.col("keep")).select("doc_id")

@@ -20,7 +20,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from azure_batch_map_reduce_spark.catalog import load_tables
-from azure_batch_map_reduce_spark.operators.ranks import half_up_ratio
+from azure_batch_map_reduce_spark.operators.ranks import (
+    desc_key,
+    half_up_ratio,
+    rank_small,
+    round_nz,
+)
 from azure_batch_map_reduce_spark.registry import query
 
 
@@ -1004,8 +1009,6 @@ def q190_hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tables = load_tables(spark, sf_dir)
     docs, emb = tables["documents"], tables["embeddings"]
-
-    from azure_batch_map_reduce_spark.operators.ranks import desc_key, rank_small
 
     sparse_top = (
         bm25_scores(docs).orderBy(F.desc("bm25"), F.asc("doc_id")).limit(20)
@@ -3178,7 +3181,6 @@ def q337_knn_shapley_valuation(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("sum_sv") / F.col("n_q")).alias("mean_sv"),
         )
     )
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
 
     return (
         pooled.join(tr.select("tid", "ty"), "tid")
@@ -3352,8 +3354,6 @@ def q343_linear_model_gd_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round() is half-EVEN and diverges at exact half boundaries (the
     # q345 rounding-mode discipline). round_nz normalizes
     # the signed zero exactly like the oracle's `+ 0.0`.
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
-
     out_rows = [("loss", k + 1, losses[k]) for k in range(_GD_STEPS)]
     out_rows += [("w", d, w[d - 1]) for d in range(1, 66)]
     return (
@@ -3503,16 +3503,15 @@ def q378_als_user_factor_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     det = a11 * a22 - a12 * a12
     u1 = (a22 * b1 - a12 * b2) / det
     u2 = (a11 * b2 - a12 * b1) / det
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz as _rnz
 
     pf1, pf2 = _ALS_F[2][1], _ALS_F[2][2]
-    pred = _rnz(u1 * pf1 + u2 * pf2, 6)
+    pred = round_nz(u1 * pf1 + u2 * pf2, 6)
     return (
         folded.select(
             "user_id",
             F.col("n_items").cast("long").alias("n_items"),
-            _rnz(u1, 6).alias("u1"),
-            _rnz(u2, 6).alias("u2"),
+            round_nz(u1, 6).alias("u1"),
+            round_nz(u2, 6).alias("u2"),
             pred.alias("pred_purchase"),
         )
         .orderBy(F.desc("pred_purchase"), F.asc("user_id"))
@@ -3756,7 +3755,6 @@ def q397_source_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(dec("g") * dec("g")).alias("b2"),
         )
     )
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
 
     return (
         dots.join(nsrc, "source")
@@ -3878,8 +3876,6 @@ def q414_cluster_silhouette_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     decimal(38,0) (the q397 posture). Reference contract: per-vector
     statistics = map slot (``App.config:16``); cluster rollup +
     verdict = reduce slot (``App.config:17``, ``Program.cs:351-384``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
-
     emb = load_tables(spark, sf_dir)["embeddings"]
     okl = (
         emb.groupBy("label")
@@ -4541,18 +4537,7 @@ def q453_multiprobe_lsh_recall_audit(
     sampling-invariant. Reference contract: per-vector signature +
     scoring = map slot (``App.config:16``); recall consolidation =
     reduce slot (``App.config:17``, ``Program.cs:351-384``)."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    sig = F.concat(
-        *[
-            F.when(F.element_at("e", i) >= 0, F.lit("1")).otherwise(
-                F.lit("0")
-            )
-            for i in range(1, 7)
-        ]
-    )
-    base = emb.select(
-        "vec_id", _as_double(F.col("embedding")).alias("e")
-    ).select("vec_id", "e", sig.alias("sig"))
+    base = _sign_buckets(spark, sf_dir)
     qv = base.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("qe"),

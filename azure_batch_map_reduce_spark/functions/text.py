@@ -16,9 +16,10 @@ from azure_batch_map_reduce_spark.operators.ranks import (
     bounded_order,
     half_up_ratio,
     hex_int,
+    rank_small,
     round_nz,
 )
-from azure_batch_map_reduce_spark.registry import query
+from azure_batch_map_reduce_spark.registry import REGISTRY, query
 from azure_batch_map_reduce_spark.session import session_store
 
 # Distinct-marker-word language scoring: deterministic, vocabulary-based.
@@ -1218,7 +1219,6 @@ def q202_vocab_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("tf"),
         F.countDistinct("doc_id").alias("df"),
     )
-    from azure_batch_map_reduce_spark.operators.ranks import rank_small
 
     top = vocab.orderBy(F.desc("tf"), F.asc("word")).limit(200)
     return (
@@ -4041,8 +4041,6 @@ def _tdi_oracle() -> str:
     the composition inherits their verified semantics; the draft fold
     encodes (doc, team) pairs in one flat BIGINT list (same-type
     accumulator, the q267 rule)."""
-    from azure_batch_map_reduce_spark.registry import REGISTRY
-
     bm = REGISTRY["q107_bm25_retrieval"].oracle
     ql = REGISTRY["q360_query_likelihood_dirichlet"].oracle
     picked = "list_transform(range(1, len(acc) // 2 + 1), i -> acc[2 * i - 1])"
@@ -4118,8 +4116,6 @@ def q377_team_draft_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     10-element arrays on a 1-row frame. Reference contract: the two
     rankers are map-slot programs; the interleave is the reduce slot
     (``App.config:16-17``)."""
-    from azure_batch_map_reduce_spark.registry import REGISTRY
-
     a_df = REGISTRY["q107_bm25_retrieval"].fn(spark, sf_dir)
     b_df = REGISTRY["q360_query_likelihood_dirichlet"].fn(spark, sf_dir)
 
@@ -7726,15 +7722,13 @@ def q472_nucleus_successor_audit(
     No global windows, no second corpus pass. Reference contract:
     bigram counting = map slot (``App.config:16``); nucleus rollup =
     reduce slot (``App.config:17``, ``Program.cs:351-384``)."""
-    from pyspark.sql import Window as W
-
     bg = _bigram_counts(spark, sf_dir)
     wcum = (
-        W.partitionBy("w1")
+        Window.partitionBy("w1")
         .orderBy(F.desc("c"), F.asc("w2"))
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    wall = W.partitionBy("w1")
+    wall = Window.partitionBy("w1")
     cum = bg.select(
         "w1",
         "c",

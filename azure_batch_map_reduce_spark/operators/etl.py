@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from azure_batch_map_reduce_spark.catalog import load_tables
+from azure_batch_map_reduce_spark.catalog import load_tables, register_views
 from azure_batch_map_reduce_spark.operators.ranks import half_up_ratio, hex_int
 from azure_batch_map_reduce_spark.registry import query
 
@@ -541,8 +541,6 @@ def q154_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     skewed type mix, swap in approx edges (percentile_approx) without
     touching the PSI layer.
     """
-    from azure_batch_map_reduce_spark.catalog import register_views
-
     register_views(spark, sf_dir)
     return spark.sql(_PSI_SQL)
 

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from azure_batch_map_reduce_spark.catalog import load_tables
+from azure_batch_map_reduce_spark.catalog import load_tables, register_views
 from azure_batch_map_reduce_spark.operators.ranks import half_up_ratio, hex_int
 from azure_batch_map_reduce_spark.registry import query
 
@@ -444,8 +444,6 @@ def q116_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     LATERAL form is API surface, not a different (worse) engine path.
     Verified in tests/test_plans.py: no nested-loop re-execution.
     """
-    from azure_batch_map_reduce_spark.catalog import register_views
-
     register_views(spark, sf_dir)
     return spark.sql(_LATERAL_SQL)
 

@@ -29,6 +29,7 @@ from azure_batch_map_reduce_spark.catalog import (
 )
 from azure_batch_map_reduce_spark.operators.ranks import (
     bounded_order,
+    distributed_row_number,
     distributed_running_extremum,
     distributed_running_sum,
     half_up_ratio,
@@ -2938,9 +2939,6 @@ def q285_mergeable_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataF
     # final reducer (7.9 s at sf0.1); ranking + two point lookups at
     # floor/ceil(1 + p(n-1)) computes the identical interpolated value
     # with every stage parallel.
-    from azure_batch_map_reduce_spark.operators.ranks import (
-        distributed_row_number,
-    )
 
     ranked = distributed_row_number(
         li.select(

@@ -10,8 +10,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from azure_batch_map_reduce_spark.catalog import load_tables
+from azure_batch_map_reduce_spark.catalog import load_tables, rebalance_for_cpu
 from azure_batch_map_reduce_spark.operators.ranks import (
+    _idiv,
     bounded_order,
     distributed_row_number,
     half_up_ratio,
@@ -3157,7 +3158,6 @@ def q314_funnel_step_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(w).alias("rn"),
         F.count(F.lit(1)).over(wc).alias("n"),
     )
-    from azure_batch_map_reduce_spark.operators.ranks import _idiv
 
     med_pos = _idiv(F.col("n") + 1, F.lit(2))
     p90_pos = _idiv(9 * F.col("n") + 9, F.lit(10))
@@ -3837,8 +3837,6 @@ def q373_markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFra
     # yields ONE partition, so the collect_list partial agg would run
     # single-threaded (3 s for 0.2 s of scan) — rebalance_for_cpu is
     # the documented fix for exactly this shape.
-    from azure_batch_map_reduce_spark.catalog import rebalance_for_cpu
-
     per_user = rebalance_for_cpu(
         ev.select("user_id", "ts", "event_id", "event_type")
     ).groupBy("user_id").agg(

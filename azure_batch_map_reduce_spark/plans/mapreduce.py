@@ -39,7 +39,7 @@ from collections.abc import Callable, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -413,8 +413,6 @@ def q315_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver — zero shuffle, zero extra reads at any scale; the one
     materialization inside the builder is the observed job itself
     (same pattern as the streaming queries' run_available_now)."""
-    from pyspark.sql import Observation
-
     li = load_tables(spark, sf_dir)["lineitem"].where(
         F.col("l_shipdate") <= F.lit("1998-09-02").cast("date")
     )

@@ -32,6 +32,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from azure_batch_map_reduce_spark.catalog import load_tables, scratch_dir
 from azure_batch_map_reduce_spark.registry import query
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -340,11 +341,6 @@ if _HAVE_WRITER:
         upload-on-completion (``Program.cs:339-345``); the manifest =
         the gather list the reducer consumes (``Program.cs:365-378``).
         """
-        from azure_batch_map_reduce_spark.catalog import (
-            load_tables,
-            scratch_dir,
-        )
-
         spark.dataSource.register(LedgerSinkSource)
         d = scratch_dir("abmr-pysink-")
         agg = (
@@ -613,8 +609,6 @@ if _HAVE_STREAM:
         import os
         import time
 
-        from azure_batch_map_reduce_spark.catalog import scratch_dir
-
         d = scratch_dir("abmr_paced_stream_")
         ledger = os.path.join(d, "offsets.jsonl")
         out_dir = os.path.join(d, "batches")
@@ -634,7 +628,7 @@ if _HAVE_STREAM:
                 .parquet(out_dir)
             )
 
-        n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+        n_docs = load_tables(spark, sf_dir)["documents"].count()
         q = (
             stream.writeStream.foreachBatch(sink)
             .option("checkpointLocation", os.path.join(d, "ckpt"))
@@ -770,8 +764,6 @@ if _HAVE_STREAM and _HAVE_WRITER:
         import os
         import time
 
-        from azure_batch_map_reduce_spark.catalog import scratch_dir
-
         d = scratch_dir("abmr_exactly_once_")
         journal = os.path.join(d, "offsets.jsonl")
         batches_root = os.path.join(d, "batches")
@@ -849,7 +841,7 @@ if _HAVE_STREAM and _HAVE_WRITER:
                     n += json.load(f)["total_rows"]
             return n
 
-        n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+        n_docs = load_tables(spark, sf_dir)["documents"].count()
 
         # Phase 2: restart from the same checkpoint; the resumable
         # reader recovers its pacing from the journal. Drain until the

@@ -24,6 +24,14 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from azure_batch_map_reduce_spark.catalog import (
+    align_session_for_oracle,
+    load_tables,
+    normalize_event_ts,
+    parquet_schema,
+    read_table,
+    scratch_dir,
+)
 from azure_batch_map_reduce_spark.registry import query
 
 
@@ -72,21 +80,15 @@ def q122_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import os
 
-    from azure_batch_map_reduce_spark.catalog import (
-        align_session_for_oracle,
-        normalize_event_ts,
-        scratch_dir,
-    )
-
     align_session_for_oracle(spark)  # caller-owned sessions may be non-UTC
     d = scratch_dir("abmr-stream-upsert-")
     src = os.path.join(d, "src")
     tgt = os.path.join(d, "target")
 
     # Fragment the fixture so availableNow yields MULTIPLE micro-batches.
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    raw = read_table(spark, os.path.join(sf_dir, "events.parquet"))
     raw.repartition(8).write.parquet(src)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(src)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -180,8 +182,6 @@ def q402_idempotent_sink_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle can replay it. Reference contract: delivery emission =
     map slot (``App.config:16``); ledger rollup = reduce slot
     (``App.config:17``)."""
-    from azure_batch_map_reduce_spark.catalog import load_tables
-
     ev = load_tables(spark, sf_dir)["events"].select("event_id")
     once = ev.select(
         "event_id",
@@ -249,8 +249,6 @@ def run_idempotent_ledger_stream(
     import glob
     import os
 
-    from azure_batch_map_reduce_spark.catalog import load_tables, scratch_dir
-
     # atexit-registered scratch (plus try/finally below) — any raise out
     # of the stream/replay/audit phases removes the tree instead of
     # leaking it.
@@ -270,7 +268,7 @@ def run_idempotent_ledger_stream(
             )
         )
         deliveries.repartition(n_files).write.parquet(src)
-        schema = spark.read.parquet(src).schema
+        schema = parquet_schema(src)
 
         stream = (
             spark.readStream.schema(schema)

@@ -28,9 +28,10 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from azure_batch_map_reduce_spark.catalog import load_tables, parquet_schema, scratch_dir
 from azure_batch_map_reduce_spark.registry import query
 
 GAP_S = 30 * 60.0
@@ -599,8 +600,6 @@ def _restart_cut_us(ev: DataFrame) -> int:
     Falls back to the global midpoint if no user ever has two events
     within one gap. One window pass at (user) grain, µs integer
     arithmetic throughout (q318's interval rule)."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )
@@ -687,8 +686,6 @@ def q405_stream_restart_from_checkpoint(
     reference's whole-job resubmission on failure (``Program.cs``
     monitors task state but re-runs failed tasks from scratch;
     SURVEY §2.1 L13) with resumable per-key state."""
-    from azure_batch_map_reduce_spark.catalog import load_tables
-
     ev = load_tables(spark, sf_dir)["events"].select(
         "user_id", "event_id", "ts", "value"
     )
@@ -714,7 +711,7 @@ def _restart_drill_phases(
 
     # Phase 1: everything at or before the cut, as ONE delivery file.
     ev.where(F.unix_micros("ts") <= cut_us).coalesce(1).write.parquet(src)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(src)
 
     def run_once() -> None:
         q = (
@@ -803,8 +800,6 @@ def run_restart_drill(
     import os
     import shutil
 
-    from azure_batch_map_reduce_spark.catalog import scratch_dir
-
     if sink_dir is not None:
         final = _restart_drill_phases(spark, ev, cut_us, sink_dir, sessionize_fn)
         final_path = os.path.join(sink_dir, "final")
@@ -871,8 +866,6 @@ def q410_tws_restart_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     as q405 (restart-from-checkpoint replaces whole-job resubmission,
     ``Program.cs`` task-state monitor, SURVEY §2.1 L13).
     """
-    from azure_batch_map_reduce_spark.catalog import load_tables
-
     ev = load_tables(spark, sf_dir)["events"].select(
         "user_id", "event_id", "ts", "value"
     )
@@ -913,8 +906,6 @@ def q411_restart_writethrough_sink(spark: SparkSession, sf_dir: str) -> DataFram
     (``Program.cs:351-384``, results uploaded per-task then gathered),
     replacing gather-to-driver with write-through.
     """
-    from azure_batch_map_reduce_spark.catalog import load_tables, scratch_dir
-
     ev = load_tables(spark, sf_dir)["events"].select(
         "user_id", "event_id", "ts", "value"
     )

@@ -20,23 +20,31 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from azure_batch_map_reduce_spark.catalog import (
     align_session_for_oracle,
+    data_files,
     load_tables,
     normalize_event_ts,
+    parquet_schema,
+    scratch_dir,
     table_path,
 )
-from azure_batch_map_reduce_spark.operators.ranks import half_up_ratio, hex_int
+from azure_batch_map_reduce_spark.operators.ranks import (
+    _idiv,
+    distributed_row_number,
+    distributed_running_extremum,
+    half_up_ratio,
+    hex_int,
+    round_nz,
+)
 from azure_batch_map_reduce_spark.registry import query
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events fixture as a REAL file-source stream (schema read
-    up-front — streaming sources require one; ns-timestamp normalization
-    mirrors catalog.py)."""
-    src = table_path(sf_dir, "events")
+    up-front from the parquet footer — streaming sources require one;
+    ns-timestamp normalization mirrors catalog.py)."""
     align_session_for_oracle(spark)
-    raw_schema = spark.read.parquet(src).schema
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(parquet_schema(table_path(sf_dir, "events")))
         .format("parquet")
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
@@ -73,23 +81,14 @@ def stream_shuffle_partitions(
     files, but the normal Spark layout is a directory of part files,
     where a bare ``os.path.getsize`` returns the directory inode size
     (~4 KB) and silently collapses the stream to one state partition.
-    Hidden entries (``_SUCCESS``, ``.crc``) are skipped like Spark's
-    own file index does."""
+    :func:`catalog.data_files` skips hidden entries (``_SUCCESS``,
+    ``.crc``) like Spark's own file index does."""
     import math
     import os
 
-    def _data_bytes(path: str) -> int:
-        if os.path.isfile(path):
-            return os.path.getsize(path)
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f.startswith((".", "_")):
-                    continue
-                total += os.path.getsize(os.path.join(root, f))
-        return total
-
-    total = sum(_data_bytes(table_path(sf_dir, t)) for t in tables)
+    total = sum(
+        os.path.getsize(f) for t in tables for f in data_files(table_path(sf_dir, t))
+    )
     cpus = spark.sparkContext.defaultParallelism
     n = max(1, math.ceil(total / _STREAM_STATE_TARGET_BYTES))
     return min(n, max(8 * cpus, 1))
@@ -1054,7 +1053,6 @@ def q287_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             "window_end"
         )
     ).agg(F.countDistinct("user_id").alias("exact_distinct"))
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
 
     return (
         state.withColumn("hll_estimate", est)
@@ -1126,8 +1124,6 @@ def q301_lambda_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied to streaming. Reference contract: the dual map paths are
     the map slot (``App.config:16``); the serving merge = reduce slot
     (``App.config:17``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import round_nz
-
     ev = events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
     agg = (
         ev.groupBy(F.window("ts", "1 hour").alias("w"))
@@ -1326,12 +1322,6 @@ def q305_watermark_delay_recommendation(spark: SparkSession, sf_dir: str) -> Dat
     operation that naively needs two global sorts. Reference contract:
     per-event lateness = map slot (``App.config:16``); quantile
     consolidation = reduce slot (``App.config:17``)."""
-    from azure_batch_map_reduce_spark.operators.ranks import (
-        _idiv,
-        distributed_row_number,
-        distributed_running_extremum,
-    )
-
     events = load_tables(spark, sf_dir)["events"]
     arrival = F.unix_micros("ts") + _arrival_key() % 120000000
     arr = distributed_running_extremum(
@@ -1505,8 +1495,6 @@ def q406_multi_source_stream_union(spark: SparkSession, sf_dir: str) -> DataFram
     import os
     import shutil
 
-    from azure_batch_map_reduce_spark.catalog import load_tables, scratch_dir
-
     # atexit-registered scratch + try/finally: every exit path (success,
     # stream timeout, any other raise) removes the feed dirs instead of
     # leaking them.
@@ -1520,7 +1508,7 @@ def q406_multi_source_stream_union(spark: SparkSession, sf_dir: str) -> DataFram
             src = os.path.join(d, f"feed{i}")
             ev.where(F.col("event_id") % 3 == i).coalesce(1).write.parquet(src)
             srcs.append(src)
-        schema = spark.read.parquet(srcs[0]).schema
+        schema = parquet_schema(srcs[0])
 
         merged = None
         for src in srcs:

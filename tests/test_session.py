@@ -94,13 +94,16 @@ def test_application_id_only_in_session_module():
         ("bpe_merge_symbols(", "functions/text.py::_bpe_train"),
         ("F.conv(", "operators/ranks.py::hex_int"),
         ('F.element_at("embedding", i) >= 0', "functions/similarity.py::_sign6"),
+        # Any column's per-coordinate sign test, e.g. on the doubled `e`.
+        ('", i) >= 0', "functions/similarity.py::_sign6"),
         ("i -> struct(element_at(ws, i) AS w1,", "functions/text.py::_bigram_counts"),
+        ("pq.read_metadata(", "catalog.py::parquet_schema"),
     ],
 )
 def test_copied_stage_is_built_in_one_place(call, owner):
     """The MinHash signature stage, the BPE trainer, the md5 → BIGINT
-    hash rule, the sign-LSH signature and the bigram count table are
-    each built by one function; a query that needs one calls that
+    hash rule, the sign-LSH signature, the bigram count table and the
+    parquet footer schema read are each built by one function; a query that needs one calls that
     function instead of writing its pieces again. Hits are named by the
     enclosing top-level function."""
     callers = set()
