@@ -7,7 +7,7 @@
 # `test` is ROADMAP.md's Tier-1 gate: everything at sf0.001 under the
 # gate's timeout, listing the 25 slowest tests.
 
-.PHONY: test verify-driver verify-sf01 bench bench-commit operators
+.PHONY: test verify-driver verify-sf01 bench bench-commit operators lines
 
 test:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
@@ -32,3 +32,7 @@ bench-commit:
 
 operators:
 	python -m azure_batch_map_reduce_spark.registry
+
+# The package's code-line count (no comments, blank lines or docstrings).
+lines:
+	python scripts/code_lines.py

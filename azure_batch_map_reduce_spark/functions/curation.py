@@ -7667,6 +7667,12 @@ _QC_STOPS = ("scan", "column", "window", "order", "sort")
 _QC_THRESH = 300  # label rule: y = 1 iff n_chars > 300 (median ~312)
 
 
+def _hup(nc: int, n: int) -> float:
+    """The released accuracy ``nc / n`` rounded half-up at 6 digits, in
+    integer arithmetic."""
+    return ((2 * nc * _QC_QSCALE + n) // (2 * n)) / 1000000.0
+
+
 def _qc_obs_sql(
     with_source: bool = False, with_id: bool = False, name: str = "obs"
 ) -> str:
@@ -11123,14 +11129,11 @@ def q473_federated_averaging_round(
     ]
     gfin = {"n_correct": ev["g"]["nc"], "n": ev["g"]["n"]}
 
-    def hup(nc: int, n: int) -> float:
-        return ((2 * nc * _QC_QSCALE + n) // (2 * n)) / 1000000.0
-
     rows = []
     for k, (nc, n) in enumerate(shard_stats):
-        rows.append(("shard_acc", k, hup(nc, n)))
+        rows.append(("shard_acc", k, _hup(nc, n)))
         rows.append(("shard_n", k, float(n)))
-    rows.append(("avg_acc", 0, hup(int(gfin["n_correct"]), int(gfin["n"]))))
+    rows.append(("avg_acc", 0, _hup(int(gfin["n_correct"]), int(gfin["n"]))))
     out = spark.createDataFrame(
         rows, "item string, idx int, value double"
     )
@@ -11261,13 +11264,10 @@ def q474_polyak_tail_averaging(
     nc_l, n_l = ev["last"]["nc"], ev["last"]["n"]
     nc_s, n_s = ev["swa"]["nc"], ev["swa"]["n"]
 
-    def hup(nc: int, n: int) -> float:
-        return ((2 * nc * _QC_QSCALE + n) // (2 * n)) / 1000000.0
-
     out = spark.createDataFrame(
         [
-            ("acc_final", 0, hup(nc_l, n_l)),
-            ("acc_swa", 0, hup(nc_s, n_s)),
+            ("acc_final", 0, _hup(nc_l, n_l)),
+            ("acc_swa", 0, _hup(nc_s, n_s)),
         ],
         "item string, idx int, value double",
     )
@@ -11365,11 +11365,8 @@ def q475_lr_schedule_training(
     )[0]
     fin = {"n_correct": ev["nc"], "n": ev["n"]}
 
-    def hup(nc: int, n: int) -> float:
-        return ((2 * nc * _QC_QSCALE + n) // (2 * n)) / 1000000.0
-
-    rows = [("acc", j + 1, hup(nc, n)) for j, (nc, n) in enumerate(accs)]
-    rows.append(("acc", k + 1, hup(int(fin["n_correct"]), int(fin["n"]))))
+    rows = [("acc", j + 1, _hup(nc, n)) for j, (nc, n) in enumerate(accs)]
+    rows.append(("acc", k + 1, _hup(int(fin["n_correct"]), int(fin["n"]))))
     rows += [("lr", j + 1, _LRS_SCHED[j]) for j in range(k)]
     out = spark.createDataFrame(rows, "item string, idx int, value double")
     wrows = spark.createDataFrame(
@@ -11736,15 +11733,12 @@ def q477_knowledge_distillation(
     obs2.unpersist()
     obs.unpersist()
 
-    def hup(nc: int, n: int) -> float:
-        return ((2 * nc * _QC_QSCALE + n) // (2 * n)) / 1000000.0
-
     n = int(ev["n"])
     out = spark.createDataFrame(
         [
-            ("acc_teacher", 0, hup(int(ev["t_correct"]), n)),
-            ("acc_student", 0, hup(int(ev["s_correct"]), n)),
-            ("agreement", 0, hup(int(ev["agree"]), n)),
+            ("acc_teacher", 0, _hup(int(ev["t_correct"]), n)),
+            ("acc_student", 0, _hup(int(ev["s_correct"]), n)),
+            ("agreement", 0, _hup(int(ev["agree"]), n)),
         ],
         "item string, idx int, value double",
     )
@@ -11956,18 +11950,15 @@ def q478_dpo_preference_step(
     fin = dpo_step(w, with_grads=False)
     pairs.unpersist()
 
-    def hup(nc: int, n: int) -> float:
-        return ((2 * nc * _QC_QSCALE + n) // (2 * n)) / 1000000.0
-
     rows_out = [
-        ("rank_acc", k + 1, hup(accs[k], n_pairs))
+        ("rank_acc", k + 1, _hup(accs[k], n_pairs))
         for k in range(_DPO_STEPS)
     ]
     rows_out.append(
         (
             "rank_acc",
             _DPO_STEPS + 1,
-            hup(int(fin["n_ranked"]), int(fin["n"])),
+            _hup(int(fin["n_ranked"]), int(fin["n"])),
         )
     )
     rows_out.append(("pair_n", 0, float(n_pairs)))

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from azure_batch_map_reduce_spark.catalog import load_tables, scratch_dir
+from azure_batch_map_reduce_spark.catalog import load_tables, read_table, scratch_dir
 from azure_batch_map_reduce_spark.functions.similarity import _as_double, _dot
 from azure_batch_map_reduce_spark.operators.ranks import (
     half_up_ratio,
@@ -3492,7 +3492,7 @@ def q421_dedup_corpus_materialization(
     )
     d = scratch_dir("spark_graft_dedup_corpus_")
     survivors.write.mode("overwrite").parquet(d)
-    return spark.read.parquet(d).orderBy("doc_id")
+    return read_table(spark, d).orderBy("doc_id")
 
 
 # --- q426: phonetic (Soundex) blocking for typo-variant linkage -------

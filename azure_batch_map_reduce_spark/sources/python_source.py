@@ -32,7 +32,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from azure_batch_map_reduce_spark.catalog import load_tables, scratch_dir
+from azure_batch_map_reduce_spark.catalog import load_tables, read_table, scratch_dir
 from azure_batch_map_reduce_spark.registry import query
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -650,9 +650,9 @@ if _HAVE_STREAM:
                 streamed = 0
                 if planned >= _PACED_CHUNKS:
                     try:
-                        streamed = spark.read.parquet(out_dir).count()
+                        streamed = read_table(spark, out_dir).count()
                     except Exception:
-                        streamed = 0  # sink dir mid-write; retry
+                        streamed = 0  # sink dir missing or mid-write; retry
                 if streamed >= n_docs:
                     break
                 if time.time() > deadline:
@@ -666,7 +666,7 @@ if _HAVE_STREAM:
             q.stop()
         with open(ledger) as f:
             records = [json.loads(line) for line in f]
-        return records, spark.read.parquet(out_dir)
+        return records, read_table(spark, out_dir)
 
 
 # --- q469: end-to-end exactly-once through BOTH Python endpoints ----------

@@ -16,10 +16,18 @@ pruning; on bare parquet we version directories and atomically advance a
 pointer, which is exactly the commit-protocol shape those formats
 implement properly. State per key is one row — bounded like q84's
 sessionization state.
+
+The versioned-table protocol is one pair of helpers: :func:`_commit_version`
+writes each micro-batch's state as a new ``{prefix}_v{batch_id:05d}``
+directory and :func:`_latest_version` reads the newest one back through
+``catalog.read_table``. Both streams here run under
+``windows.drain_available_now``.
 """
 
 from __future__ import annotations
 
+import glob
+import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
@@ -33,6 +41,21 @@ from azure_batch_map_reduce_spark.catalog import (
     scratch_dir,
 )
 from azure_batch_map_reduce_spark.registry import query
+from azure_batch_map_reduce_spark.streaming.windows import drain_available_now
+
+
+def _latest_version(spark: SparkSession, prefix: str) -> DataFrame | None:
+    """The newest committed version of the table ``prefix``, or None
+    before its first commit."""
+    versions = sorted(glob.glob(f"{prefix}_v*"))
+    return read_table(spark, versions[-1]) if versions else None
+
+
+def _commit_version(df: DataFrame, prefix: str, batch_id: int) -> None:
+    """Write ``df`` as version ``batch_id`` of the table ``prefix``. A
+    new directory per commit means readers never see a half-written
+    overwrite (the bare-parquet stand-in for a table-format commit)."""
+    df.write.mode("errorifexists").parquet(f"{prefix}_v{batch_id:05d}")
 
 
 def latest_per_user(df: DataFrame) -> DataFrame:
@@ -77,9 +100,6 @@ def q122_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     source, the final state must equal the batch argmax over ALL
     events regardless of the file/batch split — which is exactly what
     the oracle checks."""
-    import glob
-    import os
-
     align_session_for_oracle(spark)  # caller-owned sessions may be non-UTC
     d = scratch_dir("abmr-stream-upsert-")
     src = os.path.join(d, "src")
@@ -97,29 +117,19 @@ def q122_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = normalize_event_ts(stream)
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        incoming = latest_per_user(batch)
-        versions = sorted(glob.glob(f"{tgt}_v*"))
-        if versions:
-            current = batch.sparkSession.read.parquet(versions[-1])
-            merged = latest_per_user(current.unionByName(incoming))
-        else:
-            merged = incoming
-        # New version dir per commit: readers never see a half-written
-        # overwrite (the bare-parquet stand-in for a table-format commit).
-        merged.write.mode("errorifexists").parquet(f"{tgt}_v{batch_id:05d}")
+        merged = latest_per_user(batch)
+        current = _latest_version(batch.sparkSession, tgt)
+        if current is not None:
+            merged = latest_per_user(current.unionByName(merged))
+        _commit_version(merged, tgt, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(d, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream.writeStream.foreachBatch(merge_batch).option(
+            "checkpointLocation", os.path.join(d, "ckpt")
+        ),
+        "q122 upsert stream",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("q122 upsert stream did not finish within 300 s")
-
-    final = sorted(glob.glob(f"{tgt}_v*"))[-1]
-    return spark.read.parquet(final).select(
+    return _latest_version(spark, tgt).select(
         "user_id",
         F.col("event_type").alias("last_event_type"),
         F.round("value", 2).alias("last_value"),
@@ -246,9 +256,6 @@ def run_idempotent_ledger_stream(
     event_id; the anti-join co-partitions batch-vs-ledger; the audit
     is driver-side only at (n_batches) grain. On a table format the
     version directories become a MERGE-on-key with file pruning."""
-    import glob
-    import os
-
     # atexit-registered scratch (plus try/finally below) — any raise out
     # of the stream/replay/audit phases removes the tree instead of
     # leaking it.
@@ -280,18 +287,15 @@ def run_idempotent_ledger_stream(
             s = batch.sparkSession
             n_deliveries = batch.count()
             incoming = batch.select("event_id").dropDuplicates(["event_id"])
-            versions = sorted(glob.glob(f"{led}_v*"))
-            if versions:
-                seen = s.read.parquet(versions[-1])
+            seen = _latest_version(s, led)
+            if seen is not None:
                 accepted = incoming.join(seen, "event_id", "left_anti")
                 new_ledger = seen.unionAll(accepted)
             else:
                 accepted = incoming
                 new_ledger = accepted
             n_accepted = accepted.count()
-            new_ledger.write.mode("errorifexists").parquet(
-                f"{led}_v{batch_id:05d}"
-            )
+            _commit_version(new_ledger, led, batch_id)
             s.createDataFrame(
                 [
                     (
@@ -305,33 +309,24 @@ def run_idempotent_ledger_stream(
                 " n_dup_rejected long",
             ).write.mode("append").parquet(audit_dir)
 
-        q = (
-            stream.writeStream.foreachBatch(ledger_batch)
-            .option("checkpointLocation", os.path.join(d, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        # A stalled stream raises here instead of running the replay
+        # drill and audit read against PARTIAL ledger state.
+        drain_available_now(
+            stream.writeStream.foreachBatch(ledger_batch).option(
+                "checkpointLocation", os.path.join(d, "ckpt")
+            ),
+            "q402 ledger stream",
         )
-        # A stalled availableNow stream would otherwise fall through and
-        # run the replay drill + audit read against PARTIAL ledger state —
-        # fail loudly instead (awaitTermination returns False on timeout).
-        finished = q.awaitTermination(300)
-        if not finished:
-            q.stop()
-            raise TimeoutError(
-                "q402 ledger stream did not finish within 300 s"
-            )
         # Crash-replay drill: a restarted job whose checkpoint was lost
         # redelivers EVERYTHING. Push the full delivery log through the
         # same ledger merge as one more batch — exactly-once means the
         # ledger absorbs it with zero new acceptances, which the audit's
         # final row records (and the test asserts).
-        ledger_batch(spark.read.parquet(src), 1_000_000)
+        ledger_batch(read_table(spark, src), 1_000_000)
         # Materialize the audit (n_batches-grain, tiny) so the scratch
         # tree can be deleted before returning a frame that no longer
         # reads it.
-        rows = (
-            spark.read.parquet(audit_dir).orderBy("micro_batch_id").collect()
-        )
+        rows = read_table(spark, audit_dir).orderBy("micro_batch_id").collect()
         return spark.createDataFrame(
             rows,
             "micro_batch_id long, n_deliveries long, n_accepted long,"

@@ -1,5 +1,5 @@
 """Arbitrary stateful streaming: per-user sessionization with
-``applyInPandasWithState``.
+``applyInPandasWithState`` or ``transformWithStateInPandas``.
 
 Unlike :func:`..windows.session_aggregate` (built-in ``session_window``),
 this operator carries custom per-group state across micro-batches and can
@@ -15,6 +15,12 @@ wins). Under ``availableNow`` over a static source — the driver's run
 mode — there is exactly one batch, so the output is exactly the final
 session set and hash-matches the batch gaps-and-islands oracle.
 
+Both state APIs run one fold per stage: :func:`_session_fold` for the
+sessionizer and :func:`_stats_fold` for q86's running stats. Only the
+state encoding differs per API: ``GroupState`` keeps the open session's
+timestamps (:func:`_ts_state`), the typed value state keeps them as µs
+longs (:func:`_us_state` / :func:`_from_us_state`).
+
 Scale notes: state is O(1) per user (five scalars), not O(events) —
 bounded regardless of stream length; groups hash-partition across
 executors, so state shards horizontally. A production deployment adds
@@ -24,15 +30,28 @@ sessions instead of waiting for their next event.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import os
+import shutil
+from collections.abc import Iterable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from azure_batch_map_reduce_spark.catalog import load_tables, parquet_schema, scratch_dir
+from azure_batch_map_reduce_spark.catalog import (
+    load_tables,
+    parquet_schema,
+    read_table,
+    scratch_dir,
+)
 from azure_batch_map_reduce_spark.registry import query
+from azure_batch_map_reduce_spark.streaming.windows import (
+    drain_available_now,
+    events_stream,
+    run_available_now,
+    stream_shuffle_partitions,
+)
 
 GAP_S = 30 * 60.0
 
@@ -45,17 +64,24 @@ STATE_SCHEMA = (
 )
 
 
-def _sessionize(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
+def _ordered_events(pdfs: Iterable[pd.DataFrame]) -> pd.DataFrame | None:
+    """One group's rows of a micro-batch, totally ordered on
+    (ts, event_id); None when the batch brought the group no rows."""
     ev = pd.concat(list(pdfs), ignore_index=True)
     if ev.empty:
-        return
-    ev = ev.sort_values(["ts", "event_id"], ignore_index=True)
+        return None
+    return ev.sort_values(["ts", "event_id"], ignore_index=True)
 
+
+def _session_fold(
+    ev: pd.DataFrame, carry: tuple | None
+) -> tuple[list[tuple], tuple]:
+    """Fold one group's ordered events into sessions, starting from the
+    carried open session ``carry`` = (start, last_ts, n, total, max_gap),
+    or None for a group with no state. Returns the sessions this batch
+    touched, the trailing one last, and that trailing open session."""
     gaps = ev["ts"].diff().dt.total_seconds()
-    carry = state.get if state.exists else None
-    sessions: list[tuple] = []  # (start, end, n, total, max_gap)
+    sessions: list[tuple] = []
 
     if carry is not None:
         start, last_ts, n, total, max_gap = carry
@@ -81,13 +107,13 @@ def _sessionize(
             cur[3] += ev["value"].iloc[i]
             cur[4] = max(cur[4], g)
 
-    # Trailing session: emitted as a snapshot AND carried in state so the
-    # next batch can extend it (see module docstring for the contract).
     sessions.append(tuple(cur))
-    state.update((cur[0], cur[1], int(cur[2]), float(cur[3]), float(cur[4])))
+    return sessions, tuple(cur)
 
-    uid = int(key[0])
-    yield pd.DataFrame(
+
+def _sessions_frame(uid: int, sessions: list[tuple]) -> pd.DataFrame:
+    """The OUT_SCHEMA rows of one user's sessions."""
+    return pd.DataFrame(
         {
             "user_id": [uid] * len(sessions),
             "session_start": [s[0] for s in sessions],
@@ -97,6 +123,52 @@ def _sessionize(
             "max_gap_s": [round(float(s[4]), 2) for s in sessions],
         }
     )
+
+
+def _ts_state(session: tuple) -> tuple:
+    """An open session as ``GroupState`` holds it (STATE_SCHEMA):
+    timestamp bounds as they are."""
+    start, last_ts, n, total, max_gap = session
+    return (start, last_ts, int(n), float(total), float(max_gap))
+
+
+def _us_state(session: tuple) -> tuple:
+    """An open session as the typed value state holds it: timestamp
+    bounds as µs longs, which the state server round-trips exactly and
+    which sidestep timestamp-unit coercion between it and pandas."""
+    start, last_ts, n, total, max_gap = session
+    return (
+        int(pd.Timestamp(start).value // 1000),
+        int(pd.Timestamp(last_ts).value // 1000),
+        int(n),
+        float(total),
+        float(max_gap),
+    )
+
+
+def _from_us_state(row: Iterable) -> tuple:
+    """The open session back from :func:`_us_state`'s encoding."""
+    start_us, last_us, n, total, max_gap = row
+    return (
+        pd.Timestamp(int(start_us) * 1000),
+        pd.Timestamp(int(last_us) * 1000),
+        n,
+        total,
+        max_gap,
+    )
+
+
+def _sessionize(
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    ev = _ordered_events(pdfs)
+    if ev is None:
+        return
+    sessions, open_session = _session_fold(ev, state.get if state.exists else None)
+    # Trailing session: emitted as a snapshot AND carried in state so the
+    # next batch can extend it (see module docstring for the contract).
+    state.update(_ts_state(open_session))
+    yield _sessions_frame(int(key[0]), sessions)
 
 
 def sessionize_stream(events: DataFrame) -> DataFrame:
@@ -157,12 +229,6 @@ def q84_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful sessionization executed as a REAL stream: file
     source → applyInPandasWithState → availableNow → memory sink; the
     collected table hash-matches the batch gaps-and-islands oracle."""
-    from azure_batch_map_reduce_spark.streaming.windows import (
-        events_stream,
-        run_available_now,
-        stream_shuffle_partitions,
-    )
-
     return run_available_now(
         sessionize_stream(events_stream(spark, sf_dir)),
         shuffle_partitions=stream_shuffle_partitions(spark, sf_dir),
@@ -170,6 +236,33 @@ def q84_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---- transformWithState (Spark 4 stateful-processor API) ----
+
+def _stats_fold(pdfs: Iterable[pd.DataFrame], carry: tuple | None) -> tuple:
+    """Fold one group's batch rows into its running (count, value total,
+    value max), starting from the carried triple, or None for a group
+    with no state."""
+    n, total, mx = carry if carry is not None else (0, 0.0, None)
+    for pdf in pdfs:
+        if len(pdf):
+            n += len(pdf)
+            total += float(pdf["value"].sum())
+            batch_max = float(pdf["value"].max())
+            mx = batch_max if mx is None else max(mx, batch_max)
+    return int(n), float(total), mx
+
+
+def _stats_frame(uid: int, stats: tuple) -> pd.DataFrame:
+    """q86's snapshot row of one user's running stats."""
+    n, total, mx = stats
+    return pd.DataFrame(
+        {
+            "user_id": [uid],
+            "n_events": [n],
+            "total_value": [round(total, 2)],
+            "max_value": [round(mx, 2)],
+        }
+    )
+
 
 try:
     # The typed-state API needs Spark 4.0+ AND protobuf (its state-server
@@ -217,39 +310,22 @@ try:
             )
 
         def handleInputRows(self, key, rows, timerValues):
-            n, total, mx = (
-                tuple(self._state.get()) if self._state.exists() else (0, 0.0, None)
+            stats = _stats_fold(
+                rows, tuple(self._state.get()) if self._state.exists() else None
             )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                batch_max = float(pdf["value"].max())
-                mx = batch_max if mx is None else max(mx, batch_max)
-            self._state.update((n, total, mx))
-            yield pd.DataFrame(
-                {
-                    "user_id": [int(key[0])],
-                    "n_events": [n],
-                    "total_value": [round(total, 2)],
-                    "max_value": [round(mx, 2)],
-                }
-            )
+            self._state.update(stats)
+            yield _stats_frame(int(key[0]), stats)
 
         def close(self) -> None:
             pass
 
     class SessionizeTWS(StatefulProcessor):
         """Sessionization on the typed state-variable API — the
-        transformWithStateInPandas twin of :func:`_sessionize` (same
-        carried open-session state, same snapshot emission contract,
-        same totally-ordered per-batch fold), so a restart drill built
-        on it must reconcile to the identical gaps-and-islands session
-        set. State holds the open trailing session as µs-integer
-        bounds + three scalars: the typed-state wire format round-trips
-        longs/doubles exactly, and µs integers sidestep any
-        timestamp-unit coercion between the state server and pandas
-        (q318's interval rule); timestamps are reconstructed exactly
-        via Timestamp(ns)."""
+        transformWithStateInPandas twin of :func:`_sessionize`: the same
+        :func:`_session_fold` and snapshot emission, so a restart drill
+        built on it must reconcile to the identical gaps-and-islands
+        session set. State holds the open trailing session in the
+        :func:`_us_state` encoding (q318's interval rule)."""
 
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._state = handle.getValueState(
@@ -258,56 +334,13 @@ try:
             )
 
         def handleInputRows(self, key, rows, timerValues):
-            ev = pd.concat(list(rows), ignore_index=True)
-            if ev.empty:
+            ev = _ordered_events(rows)
+            if ev is None:
                 return
-            ev = ev.sort_values(["ts", "event_id"], ignore_index=True)
-            gaps = ev["ts"].diff().dt.total_seconds()
-            carry = tuple(self._state.get()) if self._state.exists() else None
-            sessions: list[tuple] = []
-            if carry is not None:
-                start_us, last_us, n, total, max_gap = carry
-                start = pd.Timestamp(int(start_us) * 1000)
-                last_ts = pd.Timestamp(int(last_us) * 1000)
-                first_gap = (ev["ts"].iloc[0] - last_ts).total_seconds()
-                if first_gap <= GAP_S:
-                    cur = [start, ev["ts"].iloc[0], n + 1,
-                           total + ev["value"].iloc[0], max(max_gap, first_gap)]
-                else:
-                    sessions.append((start, last_ts, n, total, max_gap))
-                    cur = [ev["ts"].iloc[0], ev["ts"].iloc[0], 1,
-                           ev["value"].iloc[0], 0.0]
-            else:
-                cur = [ev["ts"].iloc[0], ev["ts"].iloc[0], 1,
-                       ev["value"].iloc[0], 0.0]
-            for i in range(1, len(ev)):
-                g = gaps.iloc[i]
-                if g > GAP_S:
-                    sessions.append(tuple(cur))
-                    cur = [ev["ts"].iloc[i], ev["ts"].iloc[i], 1,
-                           ev["value"].iloc[i], 0.0]
-                else:
-                    cur[1] = ev["ts"].iloc[i]
-                    cur[2] += 1
-                    cur[3] += ev["value"].iloc[i]
-                    cur[4] = max(cur[4], g)
-            sessions.append(tuple(cur))
-            self._state.update(
-                (int(pd.Timestamp(cur[0]).value // 1000),
-                 int(pd.Timestamp(cur[1]).value // 1000),
-                 int(cur[2]), float(cur[3]), float(cur[4]))
-            )
-            uid = int(key[0])
-            yield pd.DataFrame(
-                {
-                    "user_id": [uid] * len(sessions),
-                    "session_start": [s[0] for s in sessions],
-                    "session_end": [s[1] for s in sessions],
-                    "n_events": [int(s[2]) for s in sessions],
-                    "total_value": [round(float(s[3]), 2) for s in sessions],
-                    "max_gap_s": [round(float(s[4]), 2) for s in sessions],
-                }
-            )
+            carry = _from_us_state(self._state.get()) if self._state.exists() else None
+            sessions, open_session = _session_fold(ev, carry)
+            self._state.update(_us_state(open_session))
+            yield _sessions_frame(int(key[0]), sessions)
 
         def close(self) -> None:
             pass
@@ -339,22 +372,9 @@ def _running_stats_fallback(
     """Degraded-capability twin of :class:`RunningUserStats` on the
     protobuf-free ``applyInPandasWithState`` API: same carried state
     (n, total, max), same per-batch snapshot emission."""
-    n, total, mx = state.get if state.exists else (0, 0.0, None)
-    for pdf in pdfs:
-        if len(pdf):
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            batch_max = float(pdf["value"].max())
-            mx = batch_max if mx is None else max(mx, batch_max)
-    state.update((int(n), float(total), mx))
-    yield pd.DataFrame(
-        {
-            "user_id": [int(key[0])],
-            "n_events": [n],
-            "total_value": [round(total, 2)],
-            "max_value": [round(mx, 2)],
-        }
-    )
+    stats = _stats_fold(pdfs, state.get if state.exists else None)
+    state.update(stats)
+    yield _stats_frame(int(key[0]), stats)
 
 
 def q86_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -373,11 +393,6 @@ def q86_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     records which path ran in ``q86_capability()`` AND in the result's
     ``state_api`` column (mirrored as a literal in the generated
     oracle, so the driver's hash check captures the executed path)."""
-    from azure_batch_map_reduce_spark.streaming.windows import (
-        events_stream,
-        run_available_now,
-    )
-
     out_schema = (
         "user_id long, n_events long, total_value double, max_value double"
     )
@@ -397,10 +412,6 @@ def q86_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    from azure_batch_map_reduce_spark.streaming.windows import (
-        stream_shuffle_partitions,
-    )
-
     return run_available_now(
         stats,
         "update",
@@ -505,10 +516,9 @@ def _rate_limit(
     µs, leftover token-µs, admitted count, total count) across
     micro-batches; under availableNow's single batch the final
     snapshot equals the batch fold oracle."""
-    ev = pd.concat(list(pdfs), ignore_index=True)
-    if ev.empty:
+    ev = _ordered_events(pdfs)
+    if ev is None:
         return
-    ev = ev.sort_values(["ts", "event_id"], ignore_index=True)
     ts_us = (ev["ts"].astype("int64") // 1000).tolist()
 
     if state.exists:
@@ -553,11 +563,6 @@ def q267_stateful_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     key across executors; each micro-batch sorts only its own rows.
     The oracle's per-user fold list is event-count bounded — oracle
     grain only, the stream never materializes it."""
-    from azure_batch_map_reduce_spark.streaming.windows import (
-        events_stream,
-        run_available_now,
-    )
-
     src = events_stream(spark, sf_dir).select("user_id", "event_id", "ts")
     stats = src.groupBy("user_id").applyInPandasWithState(
         _rate_limit,
@@ -569,10 +574,6 @@ def q267_stateful_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    from azure_batch_map_reduce_spark.streaming.windows import (
-        stream_shuffle_partitions,
-    )
-
     return run_available_now(
         stats,
         "update",
@@ -703,8 +704,6 @@ def _restart_drill_phases(
     materialization and the lifecycle of ``root``, which must be a
     fresh directory — a reused one fails loudly on the phase-1 write
     rather than silently mixing delivery files)."""
-    import os
-
     src = os.path.join(root, "src")
     out = os.path.join(root, "out")
     ckpt = os.path.join(root, "ckpt")
@@ -714,18 +713,14 @@ def _restart_drill_phases(
     schema = parquet_schema(src)
 
     def run_once() -> None:
-        q = (
+        drain_available_now(
             _sessionize_pipeline(spark, src, schema, sessionize_fn)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            "restart-drill stream",
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("restart-drill stream did not finish within 300 s")
 
     run_once()  # query #1: processes file 1, checkpoints, terminates
 
@@ -741,7 +736,7 @@ def _restart_drill_phases(
     # (user_id, session_start); n_events grows monotonically under
     # extension, so max_by picks the survivor. Session-grain
     # partial+final aggregate, no window.
-    snapshots = spark.read.parquet(out)
+    snapshots = read_table(spark, out)
     return (
         snapshots.groupBy("user_id", "session_start")
         .agg(
@@ -797,14 +792,11 @@ def run_restart_drill(
 
     ``sessionize_fn`` selects the state API (q410 passes the
     typed-state twin)."""
-    import os
-    import shutil
-
     if sink_dir is not None:
         final = _restart_drill_phases(spark, ev, cut_us, sink_dir, sessionize_fn)
         final_path = os.path.join(sink_dir, "final")
         final.write.mode("overwrite").parquet(final_path)
-        return spark.read.parquet(final_path)
+        return read_table(spark, final_path)
 
     # scratch_dir registers atexit cleanup, and the finally below removes
     # the tree on EVERY exit path (success, timeout, or any other raise) —

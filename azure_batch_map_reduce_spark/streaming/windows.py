@@ -14,9 +14,13 @@ accumulates unbounded window state.
 
 from __future__ import annotations
 
+import math
+import os
+import shutil
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from azure_batch_map_reduce_spark.catalog import (
     align_session_for_oracle,
@@ -36,6 +40,7 @@ from azure_batch_map_reduce_spark.operators.ranks import (
     round_nz,
 )
 from azure_batch_map_reduce_spark.registry import query
+from azure_batch_map_reduce_spark.session import scoped_shuffle_partitions
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -83,9 +88,6 @@ def stream_shuffle_partitions(
     (~4 KB) and silently collapses the stream to one state partition.
     :func:`catalog.data_files` skips hidden entries (``_SUCCESS``,
     ``.crc``) like Spark's own file index does."""
-    import math
-    import os
-
     total = sum(
         os.path.getsize(f) for t in tables for f in data_files(table_path(sf_dir, t))
     )
@@ -94,13 +96,29 @@ def stream_shuffle_partitions(
     return min(n, max(8 * cpus, 1))
 
 
+# How long one availableNow run may take before it counts as stalled.
+_DRAIN_TIMEOUT_S = 300
+
+
+def drain_available_now(writer: DataStreamWriter, what: str) -> None:
+    """Start ``writer`` with an availableNow trigger and wait until the
+    query has drained its source. A query still running after
+    ``_DRAIN_TIMEOUT_S`` is stopped and raises :class:`TimeoutError`
+    naming ``what``: a stalled stream must fail loudly, not leave its
+    caller reading a partial sink."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(f"{what} did not finish within {_DRAIN_TIMEOUT_S} s")
+
+
 def run_available_now(
     df: DataFrame,
     output_mode: str = "append",
     shuffle_partitions: int | None = None,
 ) -> DataFrame:
-    """Execute a streaming frame with an availableNow trigger into a
-    memory sink; return the completed result table.
+    """Execute a streaming frame into a memory sink through
+    :func:`drain_available_now`; return the completed result table.
 
     ``shuffle_partitions`` (callers pass
     :func:`stream_shuffle_partitions`) pins the stream's state/shuffle
@@ -113,25 +131,13 @@ def run_available_now(
     The sink's uniquely named table is dropped from the catalog once
     the returned frame is built: the frame keeps the sink's rows, and
     repeated runs in one session leave no ``q_*`` tables behind."""
-    from azure_batch_map_reduce_spark.session import scoped_shuffle_partitions
-
     spark = df.sparkSession
     name = f"q_{uuid.uuid4().hex[:10]}"
     with scoped_shuffle_partitions(spark, shuffle_partitions):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
+        drain_available_now(
+            df.writeStream.format("memory").queryName(name).outputMode(output_mode),
+            f"availableNow stream {name}",
         )
-        # awaitTermination returns False on timeout — a stalled stream
-        # must fail loudly, not hand back a partial memory table.
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                f"availableNow stream {name} did not finish in 300 s"
-            )
     out = spark.table(name)
     spark.catalog.dropTempView(name)
     return out
@@ -171,6 +177,21 @@ def session_aggregate(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
             "n_events",
             "total_value",
         )
+    )
+
+
+def closed_hour_counts(events: DataFrame, *keys: str) -> DataFrame:
+    """Hourly event count and 2-digit value sum per ``keys`` under a
+    10-minute watermark. In append mode a stream emits only the windows
+    the watermark has closed; the trailing open hour is withheld."""
+    return (
+        events.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"), *keys)
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.sum("value"), 2).alias("total_value"),
+        )
+        .select(F.col("w.end").alias("window_end"), *keys, "n", "total_value")
     )
 
 
@@ -306,17 +327,8 @@ def q85_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes a 100 TB stream feasible — without the watermark every window
     ever seen stays in state forever; with it, state is
     (horizon × keys) and late stragglers are dropped deterministically."""
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
-    agg = (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(F.col("w.end").alias("window_end"), "n", "total_value")
-    )
     return run_available_now(
-        agg, "append",
+        closed_hour_counts(events_stream(spark, sf_dir)), "append",
         shuffle_partitions=stream_shuffle_partitions(spark, sf_dir),
     )
 
@@ -1124,17 +1136,8 @@ def q301_lambda_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied to streaming. Reference contract: the dual map paths are
     the map slot (``App.config:16``); the serving merge = reduce slot
     (``App.config:17``)."""
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
-    agg = (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(F.col("w.end").alias("window_end"), "n", "total_value")
-    )
     stream = run_available_now(
-        agg, "append",
+        closed_hour_counts(events_stream(spark, sf_dir)), "append",
         shuffle_partitions=stream_shuffle_partitions(spark, sf_dir),
     ).select(
         F.col("window_end").alias("s_end"),
@@ -1492,9 +1495,6 @@ def q406_multi_source_stream_union(spark: SparkSession, sf_dir: str) -> DataFram
     (``Program.cs`` task-per-file submission); N source dirs merging
     into one watermark is that fan-in expressed as a continuous
     stream."""
-    import os
-    import shutil
-
     # atexit-registered scratch + try/finally: every exit path (success,
     # stream timeout, any other raise) removes the feed dirs instead of
     # leaking them.
@@ -1515,22 +1515,8 @@ def q406_multi_source_stream_union(spark: SparkSession, sf_dir: str) -> DataFram
             s = spark.readStream.schema(schema).parquet(src)
             merged = s if merged is None else merged.unionByName(s)
 
-        agg = (
-            merged.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.round(F.sum("value"), 2).alias("total_value"),
-            )
-            .select(
-                F.col("w.end").alias("window_end"),
-                "event_type",
-                "n",
-                "total_value",
-            )
-        )
         result = run_available_now(
-            agg, "append",
+            closed_hour_counts(merged, "event_type"), "append",
             shuffle_partitions=stream_shuffle_partitions(spark, sf_dir),
         )
         # Window-grain result; materialize so the scratch feeds can go.

@@ -8,6 +8,7 @@ must run no Spark job.
 
 from __future__ import annotations
 
+import ast
 import datetime
 import decimal
 import os
@@ -169,5 +170,24 @@ def test_no_schema_inference_job_left_in_package():
         for path in sorted(PKG.rglob("*.py"))
         for i, line in enumerate(path.read_text().splitlines(), 1)
         if re.search(r"read\.parquet\([^)]*\)\.schema", line)
+    ]
+    assert not hits, hits
+
+
+def test_package_reads_its_own_tables_through_read_table():
+    """A schema-less ``spark.read.parquet(path)`` infers the schema with
+    one Spark job per call. Outside ``sources/files.py``, whose queries
+    exercise Spark's own discovery of user data and partitioned
+    layouts, the package reads tables through ``catalog.read_table``."""
+    hits = [
+        f"{path.relative_to(PKG)}:{node.lineno}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path != PKG / "sources" / "files.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "parquet"
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "read"
     ]
     assert not hits, hits

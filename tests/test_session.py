@@ -9,8 +9,8 @@ application.
 
 from __future__ import annotations
 
+import ast
 import os
-import re
 import sys
 import threading
 import time
@@ -98,24 +98,44 @@ def test_application_id_only_in_session_module():
         ('", i) >= 0', "functions/similarity.py::_sign6"),
         ("i -> struct(element_at(ws, i) AS w1,", "functions/text.py::_bigram_counts"),
         ("pq.read_metadata(", "catalog.py::parquet_schema"),
+        ("awaitTermination(", "streaming/windows.py::drain_available_now"),
+        ("availableNow=True", "streaming/windows.py::drain_available_now"),
+        ("if g > GAP_S:", "streaming/stateful.py::_session_fold"),
+        ("_QC_QSCALE + n) // (2 * n)", "functions/curation.py::_hup"),
     ],
 )
 def test_copied_stage_is_built_in_one_place(call, owner):
     """The MinHash signature stage, the BPE trainer, the md5 → BIGINT
-    hash rule, the sign-LSH signature, the bigram count table and the
-    parquet footer schema read are each built by one function; a query that needs one calls that
-    function instead of writing its pieces again. Hits are named by the
-    enclosing top-level function."""
+    hash rule, the sign-LSH signature, the bigram count table, the
+    parquet footer schema read, the availableNow drain, the session
+    fold and the trainers' half-up accuracy are each built by one
+    function; a query that needs one calls that function instead of
+    writing its pieces again."""
     callers = set()
     for path in sorted(PKG.rglob("*.py")):
-        top = None
-        for line in path.read_text().splitlines():
-            m = re.match(r"def (\w+)\(", line)
-            if m:
-                top = m.group(1)
+        source = path.read_text()
+        spans = _top_level_spans(ast.parse(source))
+        for i, line in enumerate(source.splitlines(), 1):
             if call in line and not line.lstrip().startswith("def "):
+                top = next((name for lo, hi, name in spans if lo <= i <= hi), None)
                 callers.add(f"{path.relative_to(PKG)}::{top}")
     assert callers == {owner}
+
+
+def _top_level_spans(tree: ast.Module) -> list[tuple[int, int, str]]:
+    """(first line, last line, name) of each top-level function and
+    class, decorators included, also where a module-level ``try``,
+    ``if`` or ``with`` holds the definition."""
+    spans = []
+    stack = list(tree.body)
+    while stack:
+        node = stack.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            first = min([node.lineno] + [d.lineno for d in node.decorator_list])
+            spans.append((first, node.end_lineno, node.name))
+        elif isinstance(node, (ast.Try, ast.If, ast.With, ast.ExceptHandler)):
+            stack.extend(ast.iter_child_nodes(node))
+    return spans
 
 
 def test_scoped_shuffle_partitions_rejects_a_second_thread(spark):

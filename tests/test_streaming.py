@@ -156,6 +156,73 @@ def test_apply_in_pandas_with_state(spark, sf_dir, events_dir):
     pd.testing.assert_frame_equal(_sorted(out), _sorted(batch))
 
 
+# One user's events, given out of order: a (ts) tie broken by event_id,
+# gaps under, exactly at and over the 30-minute session gap, and values
+# that sum exactly in binary floating point in any grouping.
+_FOLD_EVENTS = pd.DataFrame(
+    {
+        "user_id": 7,
+        "event_id": range(1, 11),
+        "ts": [
+            pd.Timestamp("2024-01-01") + pd.Timedelta(minutes=m, microseconds=3)
+            for m in (0, 10, 10, 45, 80, 81.5, 200, 229, 259, 300)
+        ],
+        "value": [1.5, 0.5, 2.75, 4.0, 1.25, 3.5, 2.0, 0.75, 0.25, 5.25],
+    }
+).iloc[[8, 0, 2, 1, 3, 4, 5, 7, 6, 9]]
+
+
+def _final_sessions(frames: list[pd.DataFrame]) -> pd.DataFrame:
+    """The snapshot contract: the latest row per session start wins."""
+    out = pd.concat(frames, ignore_index=True)
+    out = out.drop_duplicates("session_start", keep="last")
+    return out.sort_values("session_start", ignore_index=True)
+
+
+def test_session_fold_carries_state_through_both_encodings():
+    """Both state APIs run one session fold and one running-stats fold.
+    Splitting the events into two batches at any index, and carrying
+    the open session through either API's state encoding, gives the
+    same final sessions as one batch; q86's running stats likewise."""
+    from azure_batch_map_reduce_spark.streaming.stateful import (
+        _from_us_state,
+        _ordered_events,
+        _session_fold,
+        _sessions_frame,
+        _stats_fold,
+        _stats_frame,
+        _ts_state,
+        _us_state,
+    )
+
+    def group_state(session):
+        # GroupState.get hands timestamps back as Python datetimes.
+        return tuple(
+            v.to_pydatetime() if isinstance(v, pd.Timestamp) else v
+            for v in _ts_state(session)
+        )
+
+    def typed_state(session):
+        return _from_us_state(_us_state(session))
+
+    ordered = _ordered_events([_FOLD_EVENTS.iloc[5:], _FOLD_EVENTS.iloc[:5]])
+    assert ordered["event_id"].tolist() == list(range(1, 11))
+    one, _ = _session_fold(ordered, None)
+    whole = _final_sessions([_sessions_frame(7, one)])
+    assert whole["n_events"].tolist() == [3, 1, 2, 3, 1]
+    stats = _stats_frame(7, _stats_fold([_FOLD_EVENTS], None))
+
+    for k in range(1, len(ordered)):
+        first, second = ordered.iloc[:k], ordered.iloc[k:]
+        for carry in (group_state, typed_state):
+            s1, open1 = _session_fold(_ordered_events([first]), None)
+            s2, _ = _session_fold(_ordered_events([second]), carry(open1))
+            got = _final_sessions([_sessions_frame(7, s1), _sessions_frame(7, s2)])
+            pd.testing.assert_frame_equal(got, whole, obj=f"{carry.__name__} split {k}")
+        split = _stats_fold([second], _stats_fold([first], None))
+        pd.testing.assert_frame_equal(_stats_frame(7, split), stats)
+
+
 def test_rate_source_produces_rows(spark):
     """The built-in rate source (synthetic benchmark stream): a bounded
     availableNow-style read via processing a couple of micro-batches."""
